@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.engine.Tables
@@ -120,28 +120,26 @@ object HttpApi {
 
   private def queryRoute(spark: SparkSession, dataRoot: Option[String],
                          jdbcUrlFor: (String, String) => Option[String])(
-      ex: HttpExchange): Resp = {
+      ex: HttpExchange): Resp = answer {
     val p = params(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-    run(spark, p, dataRoot, jdbcUrlFor) { df =>
-      // Materialize the analyzed plan (and so any analysis error) BEFORE
-      // committing to a 200 streamed response.
-      val json = df.toJSON
-      Chunked(200, os => {
-        var n = 0L
-        def w(s: String): Unit = {
-          val b = s.getBytes(StandardCharsets.UTF_8); os.write(b); n += b.length
-        }
-        w("[")
-        val it = json.toLocalIterator()
-        var first = true
-        while (it.hasNext) {
-          if (!first) w(",")
-          w(it.next()); first = false
-        }
-        w("]")
-        n
-      })
-    }
+    // Materialize the analyzed plan (and so any analysis error) BEFORE
+    // committing to a 200 streamed response.
+    val json = run(spark, p, dataRoot, jdbcUrlFor).toJSON
+    Chunked(200, os => {
+      var n = 0L
+      def w(s: String): Unit = {
+        val b = s.getBytes(StandardCharsets.UTF_8); os.write(b); n += b.length
+      }
+      w("[")
+      val it = json.toLocalIterator()
+      var first = true
+      while (it.hasNext) {
+        if (!first) w(",")
+        w(it.next()); first = false
+      }
+      w("]")
+      n
+    })
   }
 
   private def elasticSave(spark: SparkSession, indexRoot: String,
@@ -150,101 +148,90 @@ object HttpApi {
       ex: HttpExchange): Resp = {
     val body = new String(ex.getRequestBody.readAllBytes(),
       StandardCharsets.UTF_8)
-    val p = params(body)
-    val indexName = p.getOrElse("indexName", "")
-    if (indexName.trim.isEmpty)
-      Full(400, errorJson("incomplete request params: indexName"))
-    else if (!IndexNamePattern.matches(indexName))
-      Full(400, errorJson(
-        s"invalid indexName (must match [A-Za-z0-9_-]+): $indexName"))
-    else run(spark, p, dataRoot, jdbcUrlFor) { df =>
+    answer {
+      val p = params(body)
+      val indexName = p.getOrElse("indexName", "")
+      if (indexName.trim.isEmpty)
+        throw EngineError.IncompleteParams("indexName")
+      if (!IndexNamePattern.matches(indexName))
+        throw new IllegalArgumentException(
+          s"invalid indexName (must match [A-Za-z0-9_-]+): $indexName")
+      val df = run(spark, p, dataRoot, jdbcUrlFor)
       val stats = Indexer.bulkIndex(df, indexRoot, indexName,
         orderBy = df.columns.toSeq.map(col), mode = "overwrite")
       Full(200, stats.jsonLine)
     }
   }
 
-  /** Shared gate+execute step with the reference's error mapping.
-    * Temp-view registration + SQL ANALYSIS are serialized JVM-wide:
-    * view registration binds the shared global view names on the one
-    * SparkSession, so with concurrent handlers, request B re-registering
-    * for a different dbName between A's register and A's analysis would
-    * silently resolve A's query against B's tables. `spark.sql` analyzes
-    * eagerly, so once the lock releases the resolved plan references
-    * this request's files directly — EXECUTION (the expensive part)
-    * stays fully concurrent.
+  /** The reference's error mapping: an [[EngineError]] answers with its
+    * own code, any other failure (form decoding, analysis, execution) 400.
+    */
+  private def answer(body: => Resp): Resp =
+    try body
+    catch {
+      case e: EngineError => Full(e.code, errorJson(e.getMessage))
+      case NonFatal(e) =>
+        Full(400, errorJson(String.valueOf(e.getMessage).take(500)))
+    }
+
+  /** Gate, then plan the query in a session of its own, as the reference
+    * opens its own connection to `dbName` per request
+    * (`api/controllers/base.go:38-66`). The child session
+    * (`spark.newSession()`) shares the SparkContext, cache manager and
+    * external catalog but has its own temp views, and starts from the
+    * server session's modifiable runtime SQL settings. Only the tables
+    * the query names ([[referencedTables]]) are bound in it, so
+    * concurrent requests for different `dbName`s never see each other's
+    * tables and the server session is never mutated: no lock, no cleanup.
     *
-    * Driver routing: `parquet` registers the fixture tables under
-    * `dbName` (a confined directory); `mysql`/`postgres` resolve a JDBC
-    * URL through `jdbcUrlFor` (the reference's env-assembled DSN) after
-    * a conservative dbName shape check (so dbName cannot inject
-    * connection properties into the URL), and bind EVERY table the
-    * query references as a JDBC-backed TEMP view — an unconfigured
-    * driver is a 400, never a silent fallback onto whatever views a
-    * prior request left behind, and the views are dropped again before
-    * the handler returns, so no request leaks views into the next.
-    * Literal `jdbc:` URLs as dbName are REJECTED over HTTP (a client-
-    * supplied URL can point the server's JDBC drivers at arbitrary
-    * endpoints/local files); library callers use [[graft.sources
-    * .Sources.table]] directly for that.
-    *
-    * Ordering: the GATE validates first (no remote I/O and no session
-    * mutation for 400/401-rejected requests), then remote schemas are
-    * fetched OUTSIDE the lock (a slow or unreachable DB must not block
-    * other requests on the JVM-wide registration lock), and only the
-    * cheap bind + analyze happens inside it.
+    * `parquet` binds fixture tables ([[Tables.names]], case-insensitive)
+    * from `dbName`, confined to `dataRoot` when set. `mysql`/`postgres`
+    * bind JDBC frames on the URL `jdbcUrlFor` resolves (the reference's
+    * env-assembled DSN) after a dbName shape check, so dbName cannot
+    * inject connection properties; an unconfigured driver is a 400.
+    * Literal `jdbc:` URLs are rejected over HTTP (a client-supplied URL
+    * can point the server's JDBC drivers at any endpoint or local file);
+    * library callers use [[graft.sources.Sources.table]] for that. The
+    * gate runs first, so a rejected request does no remote I/O.
     */
   private def run(spark: SparkSession, p: Map[String, String],
                   dataRoot: Option[String],
-                  jdbcUrlFor: (String, String) => Option[String])(
-      f: org.apache.spark.sql.DataFrame => Resp): Resp =
-    try {
-      val (driver, db, query) = (p.getOrElse("dbDriver", ""),
-        p.getOrElse("dbName", ""), p.getOrElse("query", ""))
-      QueryGate.validate(spark, driver, db, query)
-      // remote schema fetch (one round-trip per referenced table) runs
-      // unlocked; failures surface as the reference's 400
-      val jdbcViews: Seq[(String, org.apache.spark.sql.DataFrame)] =
-        if (driver == "mysql" || driver == "postgres" || driver == "jdbc") {
-          if (driver == "jdbc")
-            throw new IllegalArgumentException(
-              "literal jdbc URLs are not accepted over HTTP; use the " +
-                "mysql/postgres drivers with a configured DSN")
-          if (!DbNamePattern.matches(db))
-            throw new IllegalArgumentException(
-              s"invalid dbName (must match [A-Za-z0-9_.-]+): $db")
-          val url = jdbcUrlFor(driver, db).getOrElse(
-            throw new IllegalArgumentException(
-              s"$driver is not configured (no DB host/port in environment)"))
-          referencedTables(spark, query)
-            .map(t => t -> Sources.jdbcTable(spark, url, t))
-        } else Seq.empty
-      val df = HttpApi.synchronized {
-        try {
-          if (driver == "parquet" && db.nonEmpty) {
-            dataRoot.foreach { root =>
-              val rootPath = new java.io.File(root).getCanonicalPath
-              val dbPath = new java.io.File(db).getCanonicalPath
-              if (dbPath != rootPath &&
-                  !dbPath.startsWith(rootPath + java.io.File.separator))
-                throw EngineError.IncorrectSource(
-                  s"dbName outside data root: $db")
-            }
-            Tables.register(spark, db)
-          } else jdbcViews.foreach { case (t, frame) =>
-            frame.createOrReplaceTempView(t)
-          }
-          QueryGate.runQuery(spark, driver, db, query)
-        } finally jdbcViews.foreach { case (t, _) =>
-          spark.catalog.dropTempView(t): Unit
+                  jdbcUrlFor: (String, String) => Option[String]): DataFrame = {
+    val (driver, db, query) = (p.getOrElse("dbDriver", ""),
+      p.getOrElse("dbName", ""), p.getOrElse("query", ""))
+    QueryGate.validate(spark, driver, db, query)
+    val open: (SparkSession, String) => Option[DataFrame] =
+      if (driver == "parquet") {
+        dataRoot.foreach { root =>
+          val rootPath = new java.io.File(root).getCanonicalPath
+          val dbPath = new java.io.File(db).getCanonicalPath
+          if (dbPath != rootPath &&
+              !dbPath.startsWith(rootPath + java.io.File.separator))
+            throw EngineError.IncorrectSource(s"dbName outside data root: $db")
         }
+        (s, t) => Tables.names.find(_.equalsIgnoreCase(t))
+          .map(Tables.table(s, db, _))
+      } else {
+        if (driver == "jdbc")
+          throw new IllegalArgumentException(
+            "literal jdbc URLs are not accepted over HTTP; use the " +
+              "mysql/postgres drivers with a configured DSN")
+        if (!DbNamePattern.matches(db))
+          throw new IllegalArgumentException(
+            s"invalid dbName (must match [A-Za-z0-9_.-]+): $db")
+        val url = jdbcUrlFor(driver, db).getOrElse(
+          throw new IllegalArgumentException(
+            s"$driver is not configured (no DB host/port in environment)"))
+        (s, t) => Some(Sources.jdbcTable(s, url, t))
       }
-      f(df)
-    } catch {
-      case e: EngineError => Full(e.code, errorJson(e.getMessage))
-      case NonFatal(e) => // analysis/execution errors → reference's 400
-        Full(400, errorJson(String.valueOf(e.getMessage).take(500)))
+    val session = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) session.conf.set(k, v)
     }
+    referencedTables(session, query).foreach(t =>
+      open(session, t).foreach(_.createOrReplaceTempView(t)))
+    session.sql(query)
+  }
 
   private val DbNamePattern = "[A-Za-z0-9_.-]+".r
 
@@ -257,9 +244,7 @@ object HttpApi {
                                query: String): Seq[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
-    val root =
-      try spark.sessionState.sqlParser.parsePlan(query)
-      catch { case NonFatal(_) => return Seq.empty } // gate reports syntax
+    val root = spark.sessionState.sqlParser.parsePlan(query)
     // Worklist over the main plan plus every CTE DEFINITION plan —
     // cteRelations are not children of UnresolvedWith, so a plain
     // collect would miss tables referenced only inside a CTE body;
@@ -316,13 +301,12 @@ object HttpApi {
       val ms = (System.nanoTime() - t0) / 1e6
       val code = resp match { case Full(c, _) => c; case Chunked(c, _) => c }
       val errField = err.fold("")(e =>
-        s""","stream_error":"${e.replace("\\", "\\\\").replace("\"", "\\\"").take(200)}"""")
+        s""","stream_error":"${QueryGate.jsonEscape(e.take(200))}"""")
       log(s"""{"route":"$route","status":$code,"bytes":$nBytes,"latency_ms":$ms$errField}""")
     }
 
   private def errorJson(msg: String): String =
-    s"""{"error":"${msg.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")}"}"""
+    s"""{"error":"${QueryGate.jsonEscape(msg)}"}"""
 
   /** Decode an application/x-www-form-urlencoded or query string. */
   private def params(s: String): Map[String, String] =

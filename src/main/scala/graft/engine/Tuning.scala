@@ -84,15 +84,19 @@ object Tuning {
     "spark.sql.sources.parallelPartitionDiscovery.threshold"
   val ParallelListingThreshold: Int = 512
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    b.config(ObjectAggFallbackKey, ObjectAggFallbackEntries.toString)
-      .config(AutoBucketedScanKey, "false")
-      .config(InferTimestampNtzKey, "false")
-      .config(CachedPlanAqeKey, "true")
-      .config(ParallelListingThresholdKey,
-        ParallelListingThreshold.toString)
+  /** Every knob above with the engine's value: [[apply]] and [[ensure]]
+    * both walk this one list, so they cannot drift apart. */
+  val Settings: Seq[(String, String)] = Seq(
+    ObjectAggFallbackKey -> ObjectAggFallbackEntries.toString,
+    AutoBucketedScanKey -> "false",
+    InferTimestampNtzKey -> "false",
+    CachedPlanAqeKey -> "true",
+    ParallelListingThresholdKey -> ParallelListingThreshold.toString)
 
-  /** Apply both knobs on a live session iff the user never set them —
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    Settings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** Apply every setting on a live session iff the user never set it —
     * never overrides an explicit user setting. "Explicitly set" is
     * membership in `spark.conf.getAll` (the session's settings map,
     * which holds only set entries, not registered defaults): comparing
@@ -101,11 +105,8 @@ object Tuning {
     */
   def ensure(spark: SparkSession): Unit = {
     val explicitlySet = spark.conf.getAll.keySet
-    if (!explicitlySet.contains(ObjectAggFallbackKey))
-      spark.conf.set(ObjectAggFallbackKey, ObjectAggFallbackEntries.toString)
-    if (!explicitlySet.contains(AutoBucketedScanKey))
-      spark.conf.set(AutoBucketedScanKey, "false")
-    if (!explicitlySet.contains(InferTimestampNtzKey))
-      spark.conf.set(InferTimestampNtzKey, "false")
+    Settings.foreach { case (k, v) =>
+      if (!explicitlySet.contains(k)) spark.conf.set(k, v)
+    }
   }
 }

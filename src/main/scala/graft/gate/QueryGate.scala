@@ -102,6 +102,19 @@ object QueryGate {
     spark.sql(query)
   }
 
+  /** Escape `s` as a JSON string body: quote, backslash and every
+    * control char below 0x20. Shared by every JSON line the gate and the
+    * HTTP API emit (a 401 envelope echoes the client's query). */
+  def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   /** O15/O16 parity: the reference wraps every route in a logging
     * middleware that emits one structured line per request — status,
     * latency, and the request descriptor (`api/middlewares/
@@ -115,13 +128,10 @@ object QueryGate {
                 query: String,
                 log: String => Unit = Console.err.println): DataFrame = {
     val t0 = System.nanoTime()
-    def esc(s: String) =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
     def line(status: Int, err: Option[String]) = {
       val ms = (System.nanoTime() - t0) / 1e6
-      val errField = err.fold("")(e => s""","error":"${esc(e)}"""")
-      s"""{"op":"query","driver":"${esc(String.valueOf(dbDriver))}","db":"${esc(String.valueOf(dbName))}","status":$status,"latency_ms":$ms,"query":"${esc(String.valueOf(query).take(200))}"$errField}"""
+      val errField = err.fold("")(e => s""","error":"${jsonEscape(e)}"""")
+      s"""{"op":"query","driver":"${jsonEscape(String.valueOf(dbDriver))}","db":"${jsonEscape(String.valueOf(dbName))}","status":$status,"latency_ms":$ms,"query":"${jsonEscape(String.valueOf(query).take(200))}"$errField}"""
     }
     try {
       val df = runQuery(spark, dbDriver, dbName, query)

@@ -154,7 +154,91 @@ class HttpApiSpec extends SparkSpec {
         enc("WITH Totals AS (SELECT count(*) AS n FROM accounts) " +
           "SELECT n FROM totals"))
       assert(cte.statusCode() == 200, cte.body())
+      // no request left a view behind in the server's own session
+      assert(!spark.catalog.tableExists("accounts"))
     } finally api.stop()
+  }
+
+  test("each request binds its tables in its own session: the server " +
+    "session gains no temp view") {
+    val url = "jdbc:derby:memory:graftapiiso;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute("DROP TABLE ledger") catch { case _: Exception => () }
+      st.execute("CREATE TABLE ledger (id INT NOT NULL)")
+      st.execute("INSERT INTO ledger VALUES (1), (2), (3)"); ()
+    } finally conn.close()
+    val server = spark.newSession()
+    val indexRoot =
+      java.nio.file.Files.createTempDirectory("http-iso").toString
+    val api = HttpApi.start(server, indexRoot, log = _ => (),
+      jdbcUrlFor = (d, db) => if (d == "mysql" && db == "bank") Some(url)
+                              else None)
+    try {
+      val base = s"http://localhost:${api.port}"
+      val pq = get(s"$base/query/?dbDriver=parquet&dbName=${enc(sf001)}" +
+        "&query=" + enc("SELECT count(*) AS n FROM region r JOIN nation n " +
+          "ON n.n_regionkey = r.r_regionkey"))
+      assert(pq.statusCode() == 200 && pq.body() == """[{"n":25}]""", pq.body())
+      val my = get(s"$base/query/?dbDriver=mysql&dbName=bank&query=" +
+        enc("SELECT count(*) AS n FROM ledger"))
+      assert(my.statusCode() == 200 && my.body() == """[{"n":3}]""", my.body())
+      val save = postForm(s"$base/elastic/save/",
+        s"dbDriver=parquet&dbName=${enc(sf001)}" +
+          s"&query=${enc("SELECT * FROM region")}&indexName=regions")
+      assert(save.statusCode() == 200, save.body())
+      val views = server.catalog.listTables().collect().filter(_.isTemporary)
+      assert(views.isEmpty, views.map(_.name).mkString(","))
+    } finally api.stop()
+  }
+
+  test("interleaved concurrent requests for two dbNames each see their " +
+    "own tables") {
+    val dbs = Seq(sf001, sf001.stripSuffix("sf0.001") + "sf0.01")
+    val expected = dbs.map(db =>
+      db -> s"""[{"n":${spark.read.parquet(s"$db/lineitem.parquet").count()}}]""")
+      .toMap
+    assert(expected.values.toSet.size == 2, expected)
+    withApi { (base, _) =>
+      val sql = enc("SELECT count(*) AS n FROM lineitem")
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val futures = (0 until 24).map { i =>
+          val db = dbs(i % 2)
+          db -> java.util.concurrent.CompletableFuture.supplyAsync(() =>
+            get(s"$base/query/?dbDriver=parquet&dbName=${enc(db)}&query=$sql"),
+            pool)
+        }
+        futures.foreach { case (db, f) =>
+          val r = f.join()
+          assert(r.statusCode() == 200, r.body())
+          assert(r.body() == expected(db), s"$db answered ${r.body()}")
+        }
+      } finally pool.shutdown()
+    }
+  }
+
+  test("a 401 envelope that echoes control chars is still valid JSON") {
+    withApi { (base, _) =>
+      val q = "DROP TABLE region -- \u0001 \u001f end"
+      val r = get(s"$base/query/?dbDriver=parquet&dbName=${enc(sf001)}" +
+        s"&query=${enc(q)}")
+      assert(r.statusCode() == 401, r.body())
+      assert(!r.body().exists(_ < ' '), r.body())
+      val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(r.body())
+      assert(parsed.get("error").asText().contains(q), r.body())
+    }
+  }
+
+  test("malformed form encoding is a 400 with the error envelope") {
+    withApi { (base, _) =>
+      val save = postForm(s"$base/elastic/save/",
+        "dbDriver=parquet&dbName=x&indexName=i&query=%zz")
+      assert(save.statusCode() == 400, save.body())
+      assert(save.body().startsWith("""{"error":"""), save.body())
+    }
   }
 
   test("POST /elastic/save/ bulk-indexes the query result and reports stats") {
