@@ -1,7 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.gate.QueryGate.jsonEscape
 
 object Bench {
+
+  /** One timed entry: wall seconds, the first line of its error if it
+    * threw, and the ambient state when it ended (see [[line]]). */
+  final case class Result(name: String, sec: Double, error: Option[String],
+                          endEpochMs: Long, gcMs: Long, heapMb: Long,
+                          load1m: Double)
 
   /** Cumulative stop-the-world GC milliseconds across all collectors.
     * Deltas between queries separate "this query burned GC" from "the
@@ -31,48 +38,55 @@ object Bench {
       s.split("\\s+")(0).toDouble
     } catch { case _: Throwable => -1.0 }
 
+  // Locale-pinned numeric format: an f-interpolator uses the JVM
+  // default locale, and a comma-decimal locale would emit
+  // `"sec":0,123` — invalid JSON in the one artifact that must parse.
+  private def f3(d: Double) =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+
+  private def jstr(s: String) = "\"" + jsonEscape(s) + "\""
+
+  private def fields(r: Result) =
+    s""""sec":${f3(r.sec)},"end_epoch_ms":${r.endEpochMs},"gc_ms":${r.gcMs},"heap_mb":${r.heapMb},"load_1m":${f3(r.load1m)}"""
+
+  /** One timestamped JSON line per entry AS IT COMPLETES: if the
+    * machine stalls mid-run, the stall shows up as a gap between
+    * consecutive `end_epoch_ms` values with a flat `gc_ms` — an
+    * external cause, distinguishable from a code regression. Errors ride
+    * INSIDE the object (escaped) so the line stays machine-parseable.
+    */
+  def line(r: Result): String =
+    s"""{"q":${jstr(r.name)},${fields(r)}${r.error.fold("")(e => ",\"error\":" + jstr(e))}}"""
+
+  /** The summary artifact. Self-contained diagnostics: per-entry end
+    * timestamp, GC delta, heap and 1-min loadavg, so a contended run is
+    * adjudicable from the artifact alone; `cpus` and `action` say how
+    * it was timed. */
+  def summary(results: Seq[Result], sfDir: String, cpus: Int,
+              loadStart: Double, loadEnd: Double): String = {
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map(r => r.name -> r.sec.toString))
+    val errs = obj(results.flatMap(r => r.error.map(e => r.name -> jstr(e))))
+    val metrics = obj(results.map(r => r.name -> s"{${fields(r)}}"))
+    val total = results.map(_.sec).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"action":"noop","queries":$qs,"errors":$errs,"metrics":$metrics,"loadavg":{"start":${f3(loadStart)},"end":${f3(loadEnd)}},"sf":${jstr(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // full JSON string escape incl. control chars (a tab inside an
-    // exception message must not break the artifact's parse)
-    // Locale-pinned numeric format: an f-interpolator uses the JVM
-    // default locale, and a comma-decimal locale would emit
-    // `"sec":0,123` — invalid JSON in the one artifact that must parse.
-    def f3(d: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
-    val spark = graft.engine.Tuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Periodically force a full GC on the driver so accumulated soft
-      // refs / broadcast cleanup can't snowball across a 100+-query
-      // suite and masquerade as a query-level regression.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Run.defaultCpus
+    val spark = Run.session(cpus)
     // Warm the session (JIT, codegen compilation, file-index, shuffle
     // machinery) by running the whole suite once against the tiny
     // sf0.001 fixtures, so timed numbers measure steady-state query
     // throughput at the target SF rather than first-run JVM costs.
     // Disable with SPARK_GRAFT_WARM=0.
-    // This first count deliberately touches the TIMED fixture (not the
-    // warm one): it spins up the session/scheduler/parquet reader once
-    // so even a warm-disabled run doesn't charge JVM start-up to q01.
-    // It reads one tiny table's footer — not fixture cross-
-    // contamination with the sf0.001 warm pass below.
-    spark.read.parquet(s"$sfDir/region.parquet").count()
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM", "/root/testdata/sf0.001")
     if (warmDir != "0" && new java.io.File(warmDir).isDirectory) {
       val t0 = System.nanoTime()
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
+        try Run.materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
       System.err.println(
@@ -83,59 +97,28 @@ object Bench {
     // query-many operators — their cost belongs to ingest, and timing
     // them per-query would measure the anti-pattern the index exists
     // to avoid.
-    // Failure-tolerant like Verify's staging: entries rebuild on first
-    // use, so a staging bug must cost per-query seconds, not the whole
-    // bench artifact.
-    val tStage = System.nanoTime()
-    try SparkEntry.stage(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] staging failed: ${e.getMessage}")
-    }
-    System.err.println(
-      f"[bench] staged ($sfDir) ${(System.nanoTime() - tStage) / 1e9}%.1f s")
+    Run.stage(spark, sfDir)
     val loadStart = loadAvg1m()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       // A query that throws must fail the bench loudly — a swallowed
       // error would report a (fast!) wall time and read as a speedup.
-      val err = try { fn(spark, sfDir).count(); None } catch {
+      val err = try { Run.materialize(fn(spark, sfDir)); None } catch {
         case e: Throwable =>
           Some(e.toString.linesIterator.next().take(200))
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // per-invocation operator persists are dead after the count —
+      // per-invocation operator persists are dead after the run —
       // clear so the suite's footprint stays flat across the suite
       spark.catalog.clearCache()
-      val endMs = System.currentTimeMillis()
-      val gcMs = gcMillis() - gc0
-      val heapMb = heapUsedMb()
-      val load = loadAvg1m()
-      // One timestamped JSON line per query AS IT COMPLETES: if the
-      // machine stalls mid-run, the stall shows up as a gap between
-      // consecutive `end_epoch_ms` values with a flat `gc_ms` — an
-      // external cause, distinguishable from a code regression. Errors
-      // ride INSIDE the object (escaped) so the one line that matters
-      // most stays machine-parseable.
-      System.err.println(
-        s"""{"q":"$name","sec":${f3(sec)},"end_epoch_ms":$endMs,"gc_ms":$gcMs,"heap_mb":$heapMb,"load_1m":${f3(load)}${err.fold("")(e => ",\"error\":" + jstr(e))}}""")
-      (name, sec, err, endMs, gcMs, heapMb, load)
+      val r = Result(name, sec, err, System.currentTimeMillis(),
+        gcMillis() - gc0, heapUsedMb(), loadAvg1m())
+      System.err.println(line(r))
+      r
     }
-    val qs = results.map { case (k, v, _, _, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e), _, _, _, _) => s"\"$k\":${jstr(e)}" }
-      .mkString("{", ",", "}")
-    // Self-contained diagnostics in the artifact itself: per-query end
-    // timestamp, GC delta, heap and 1-min loadavg so a contended run
-    // is adjudicable from BENCH_r{N}.json alone (no stderr capture
-    // required).
-    val metrics = results.map { case (k, v, _, endMs, gcMs, heapMb, load) =>
-      s""""$k":{"sec":${f3(v)},"end_epoch_ms":$endMs,"gc_ms":$gcMs,"heap_mb":$heapMb,"load_1m":${f3(load)}}"""
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"metrics":$metrics,"loadavg":{"start":${f3(loadStart)},"end":${f3(loadAvg1m())}},"sf":"$sfDir"}"""
-    println(summary)
+    val out = summary(results, sfDir, cpus, loadStart, loadAvg1m())
+    println(out)
     // Also persist the summary line to a small file: the driver's
     // artifact keeps only a bounded stdout/stderr TAIL, and a full
     // metrics object can exceed it (BENCH_r07.json captured 2 KB and
@@ -149,9 +132,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")),
-        (summary + "\n").getBytes("UTF-8"))
+        (out + "\n").getBytes("UTF-8"))
     } catch { case _: java.io.IOException => () }
     spark.stop()
-    if (results.exists(_._3.nonEmpty)) sys.exit(1)
+    if (results.exists(_.error.nonEmpty)) sys.exit(1)
   }
 }

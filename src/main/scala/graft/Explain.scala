@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates EXPLAINS.md: the formatted physical plans of flagship
   * queries, with the property each plan is chosen for. This is the
   * plan-quality evidence behind PlanSpec's assertions — run
@@ -603,20 +601,12 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.engine.Tuning(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores, not the machine's: the committed plans must not depend
+    // on where they were regenerated.
+    val spark = Run.session(4)
     val sections = flagships.map { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect() // finalize the adaptive plan
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      spark.catalog.clearCache()
-      s"## $name\n\n$why\n\n```\n${plan.trim}\n```\n"
+      val plan = Run.finalPlan(SparkEntry.queries(name)(spark, sfDir))
+      s"## $name\n\n$why\n\n```\n$plan\n```\n"
     }
     val header =
       """# EXPLAINS — flagship physical plans (generated by `graft.Explain`)

@@ -1,19 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import graft.gate.QueryGate.jsonEscape
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.engine.Tuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps just those entries (and
     // just their oracle rows) — the builder's targeted-iteration
@@ -22,12 +18,8 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     // Ingest-time staging (indexes etc.) up front: entries then run in
-    // their query-many posture. A staging failure must not kill the
-    // dump — entries rebuild on first use.
-    try SparkEntry.stage(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] staging failed: ${e.getMessage}")
-    }
+    // their query-many posture.
+    Run.stage(spark, sfDir)
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -38,18 +30,10 @@ object Verify {
       // queries don't accumulate dead cached RDDs in one session
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Escaped strings: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness.
+    def q(s: String): String = "\"" + jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql.filter(e => keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -228,6 +228,9 @@ object HttpApi {
     spark.conf.getAll.foreach { case (k, v) =>
       if (spark.conf.isModifiable(k)) session.conf.set(k, v)
     }
+    // No ``SELECT ... FROM text.`/any/path` ``: a client names tables,
+    // never files, or dbName confinement would not confine anything.
+    session.conf.set("spark.sql.runSQLOnFiles", "false")
     referencedTables(session, query).foreach(t =>
       open(session, t).foreach(_.createOrReplaceTempView(t)))
     session.sql(query)

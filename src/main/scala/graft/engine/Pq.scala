@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   * serving paths that is a 1-task Spark job plus ~50–150 ms of driver
   * latency PER READ, and an index query makes 5–15 such reads (one per
   * segment artifact plus the fixture tables). Measured via
-  * [[graft.JobProfile]]: the index-lifecycle queries spend more wall
+  * `graft.Run probe`: the index-lifecycle queries spend more wall
   * time scheduling footer jobs than computing. A real catalog (Hive,
   * Iceberg, Delta) stores the schema in table metadata precisely so
   * readers never pay this; this object is that catalog layer for the

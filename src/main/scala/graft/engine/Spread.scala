@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * corpus smaller than (cores × split size) — or packed into fewer row
   * groups than the cluster has cores — plans fewer scan tasks than
   * cores and the whole shingling pass runs on a handful of them.
-  * Measured via [[graft.JobProfile]] at sf0.1/local[32]: every
+  * Measured via `graft.Run probe` at sf0.1/local[32]: every
   * dedup-family query spent 0.4–1.0 s in 1–2-task scan stages with 30
   * cores idle (the fixture is one single-row-group file).
   *

@@ -17,9 +17,10 @@ import org.apache.spark.sql.SparkSession
   * The sketch buffers are small and fixed-size (simhash: 64 longs ≈
   * 0.5 KB; minhash: k longs), so 128Ki buffers ≈ 64–128 MB per task —
   * within executor budgets at 100 TB shuffle-partition sizing — and the
-  * hash path stays hash. Applied by every engine entry point's session
-  * builder and, defensively, by [[graft.functions.GraftFunctions
-  * .register]] when the session still has the Spark default.
+  * hash path stays hash. Applied by the engine's one session builder,
+  * [[graft.Run.session]], and, defensively, by [[graft.functions
+  * .GraftFunctions.register]] when the session still has the Spark
+  * default.
   */
 object Tuning {
   val ObjectAggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"

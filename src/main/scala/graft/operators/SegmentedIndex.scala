@@ -433,7 +433,7 @@ object SegmentedIndex {
     * reads state them explicitly and skip parquet footer inference —
     * a 1-task Spark job plus ~50–150 ms of driver latency PER READ
     * that the serving paths were paying once per segment per query
-    * (guide §1/§6; measured via [[graft.JobProfile]]). Same rule
+    * (guide §1/§6; measured via `graft.Run probe`). Same rule
     * [[PostingsSchema]] already followed for the postings. `_stored`
     * stays inference-read (its columns are caller data), but through
     * [[graft.engine.Pq]]'s mtime-keyed schema memo. */

@@ -12,11 +12,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = graft.engine.Tuning(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  /** The engine's session at a fixed 4 cores, whatever the machine. */
+  lazy val session: SparkSession = Run.session(4)
 }

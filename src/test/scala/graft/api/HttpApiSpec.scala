@@ -351,4 +351,25 @@ class HttpApiSpec extends SparkSpec {
       assert(sneaky.statusCode() == 400, sneaky.body())
     } finally api.stop()
   }
+
+  test("a query cannot read files through run-SQL-on-files, with or " +
+    "without dataRoot") {
+    val secret = java.nio.file.Files.createTempFile("http-secret", ".txt")
+    java.nio.file.Files.writeString(secret, "graft-secret-line-7f3a")
+    val indexRoot = java.nio.file.Files.createTempDirectory("http-idx").toString
+    val apis = Seq(HttpApi.start(spark, indexRoot, log = _ => ()),
+      HttpApi.start(spark, indexRoot, log = _ => (),
+        dataRoot = Some("/root/testdata")))
+    try apis.foreach { api =>
+      val sql = s"SELECT * FROM text.`$secret`"
+      val r = get(s"http://localhost:${api.port}/query/?dbDriver=parquet" +
+        s"&dbName=${enc(sf001)}&query=${enc(sql)}")
+      assert(r.statusCode() / 100 == 4, r.body())
+      assert(r.body().startsWith("""{"error":"""), r.body())
+      assert(!r.body().contains("graft-secret-line-7f3a"), r.body())
+    } finally {
+      apis.foreach(_.stop())
+      java.nio.file.Files.delete(secret)
+    }
+  }
 }
