@@ -331,11 +331,13 @@ object Explain {
         "joins, O(batch) per epoch), and the certificate arm is the " +
         "only place the replayed re-aggregation exists."),
     "q164_bm25_indexed" ->
-      ("Index-served BM25: postings AND the term dictionary are " +
-        "bucket-pruned to the query term's bucket (two " +
-        "SelectedBucketsCount scans), stats ride a 1-row broadcast — " +
-        "the corpus is absent from the plan; per-query cost is the " +
-        "queried posting list, a search engine's."),
+      ("Index-served BM25: the whole-corpus segment's postings scan " +
+        "arrives with PartitionFilters [tb IN …] naming the query " +
+        "term's one bucket; df is an agg over those rows riding a " +
+        "1-row broadcast, N and totalLen are manifest literals, and " +
+        "both top-k's run off the one scored frame — the corpus is " +
+        "absent from the plan; per-query cost is the queried posting " +
+        "list, a search engine's."),
     "q165_segmented_search" ->
       ("Segmented search: every live segment's scan arrives with " +
         "PartitionFilters [tb IN …] (the query terms' hash buckets) " +

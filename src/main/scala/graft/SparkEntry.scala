@@ -36,12 +36,9 @@ object SparkEntry {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val writes = Seq[Future[Any]](
-      Future(graft.operators.Search.ensurePositionalIndex(spark, sfDir,
-        graft.engine.Tables.table(spark, sfDir, "documents"),
-        numBuckets = 8)),
+      // the whole-corpus segment root behind q164 and q105b
       Future(graft.operators.Search.ensureBm25Index(spark, sfDir,
-        graft.engine.Tables.table(spark, sfDir, "documents"),
-        numBuckets = 8)),
+        graft.engine.Tables.table(spark, sfDir, "documents"))),
       Future(SqlSurface.ensureBucketedLineitem(spark, sfDir)),
       Future(SqlSurface.ensureBucketedOrders(spark, sfDir)),
       Future(SqlSurface.ensureZorderedLineitem(spark, sfDir)),

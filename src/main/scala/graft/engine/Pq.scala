@@ -42,8 +42,7 @@ object Pq {
     * the first inference chose.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    val key = (f.getCanonicalPath, f.lastModified, f.length)
+    val key = keyOf(path)
     val cached = schemas.get(key)
     if (cached != null) spark.read.schema(cached).parquet(path)
     else {
@@ -53,11 +52,49 @@ object Pq {
     }
   }
 
+  /** Read engine artifact directories named with a leading `_` (the
+    * segment tier's `_dict`, `_impacts`, `_complete`, `_stored`,
+    * `_cfield`). Spark's file source calls such a ROOT path hidden and
+    * logs a two-line `All paths were ignored` WARN on every read (then
+    * reads it anyway); naming each directory's data entries instead —
+    * its children minus the `_`/`.` names Spark's listing skips —
+    * under `basePath=<dir>` reads the same rows and partition columns
+    * with no warning. Several directories share one scan only when
+    * their entries are plain files (unpartitioned artifacts). With no
+    * data entries at all, the result is as before: empty rows under
+    * `schema`. Without `schema`, one directory's schema is inferred
+    * and memoized as in [[read]]. */
+  def readHidden(spark: SparkSession, dirs: Seq[String],
+                 schema: Option[StructType] = None): DataFrame = {
+    val entries = dirs.flatMap(d =>
+      Option(new java.io.File(d).listFiles()).toSeq.flatten
+        .filterNot(f => "_.".contains(f.getName.head)))
+    require(dirs.size == 1 || (schema.isDefined && entries.forall(_.isFile)),
+      s"readHidden: several directories need a schema and no partitions: $dirs")
+    if (entries.isEmpty)
+      return schema.fold(read(spark, dirs.head))(s => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
+    val reader =
+      if (dirs.size == 1) spark.read.option("basePath", dirs.head)
+      else spark.read
+    val paths = entries.map(_.getPath)
+    val key = keyOf(dirs.head)
+    schema.orElse(Option(schemas.get(key))).fold {
+      val df = reader.parquet(paths: _*)
+      schemas.put(key, df.schema)
+      df
+    }(reader.schema(_).parquet(paths: _*))
+  }
+
+  private def keyOf(path: String): (String, Long, Long) = {
+    val f = new java.io.File(path)
+    (f.getCanonicalPath, f.lastModified, f.length)
+  }
+
   /** The memoized schema of one path (inferring on miss, same key
     * discipline as [[read]]) without building the final DataFrame. */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
-    val f = new java.io.File(path)
-    val key = (f.getCanonicalPath, f.lastModified, f.length)
+    val key = keyOf(path)
     val cached = schemas.get(key)
     if (cached != null) cached
     else {

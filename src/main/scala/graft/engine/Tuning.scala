@@ -27,13 +27,13 @@ object Tuning {
   val ObjectAggFallbackEntries: Int = 128 * 1024
 
   /** Keep bucketed layouts authoritative: with auto-bucketed-scan on,
-    * Spark may discard a table's bucketing when it judges it unhelpful,
-    * which also discards the bucket PRUNING that
-    * [[graft.operators.Search.phraseSearchIndexed]] and the persisted
-    * TF-IDF index rely on (a k-term phrase reads k buckets, not the
-    * table). Session-wide so every query in a suite plans under ONE
-    * config — a mid-suite per-operator flip would make later queries'
-    * timings incomparable to earlier ones.
+    * Spark may discard a catalog table's bucketing when it judges it
+    * unhelpful for the query at hand — and with it the bucketed read
+    * and bucket pruning of the staged lineitem/orders layouts
+    * ([[graft.engine.Bucketing.writeBucketed]]). Session-wide so every
+    * query in a suite plans under ONE config — a mid-suite
+    * per-operator flip would make later queries' timings incomparable
+    * to earlier ones.
     */
   val AutoBucketedScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 

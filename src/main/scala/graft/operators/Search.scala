@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   *  - analysis: tokenize (codegen'd `split`, [[TextOps.tokens]]);
   *  - inverted index: term → postings via explode + groupBy — ONE shuffle
-  *    keyed by term, partial-aggregated map-side; at scale this is
-  *    written out bucketed by term so lookups prune to one bucket;
+  *    keyed by term, partial-aggregated map-side; the persisted,
+  *    term-bucketed form is [[SegmentedIndex]]'s segment;
   *  - scoring: tf × idf with idf as the raw N/df ratio (log-free, so the
   *    score is pure IEEE mul/div — bit-identical across engines; swap in
   *    `log` for production BM25 once cross-engine bit-equality is not a
@@ -156,39 +156,6 @@ object Search {
         sort_array(collect_list(struct(col("doc_id"), col("tf"))))
           .as("postings"))
 
-  /** Term search with tf-idf-ish ranking: score(doc) = Σ_terms tf ×
-    * (N / df). Query terms are a literal set → the postings filter
-    * pushes down to the term key; only matching postings are read.
-    */
-  /** Persist the inverted index as a catalog table bucketed by term:
-    * a term lookup then scans only the buckets containing the queried
-    * terms (bucket pruning — `SelectedBucketsCount` in the plan) plus
-    * benefits from the parquet min/max term filter inside each bucket.
-    * This is the write-once/query-many posture the SCALE.md story
-    * requires of a 100 TB index; `numBuckets` sizes to corpus vocab.
-    */
-  def writeIndex(docs: DataFrame, tableName: String,
-                 numBuckets: Int = 8): Unit = {
-    graft.engine.Bucketing.dropTableAndLocation(docs.sparkSession, tableName)
-    postings(docs)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(numBuckets, "term")
-      .sortBy("term")
-      .saveAsTable(tableName)
-  }
-
-  /** Bucket-pruned postings lookup for a literal term set.
-    * `autoBucketedScan` must be off (a session-wide Tuning default):
-    * the planner's heuristic drops the bucketed read (and with it,
-    * bucket pruning) when no join/agg exploits the bucketing — but
-    * pruning IS the benefit here.
-    */
-  def lookup(spark: org.apache.spark.sql.SparkSession, tableName: String,
-             terms: Seq[String]): DataFrame =
-    // isin over literals, not string-spliced SQL: terms are caller data
-    // (a quote in a term must stay data, never become syntax).
-    spark.table(tableName).filter(col("term").isin(terms: _*))
-
   /** Positional postings: one row per (term, doc, 0-based position) —
     * the positional inverted index exact-phrase queries need (what
     * Lucene stores when a field is indexed with positions). `pos` is
@@ -201,66 +168,29 @@ object Search {
         posexplode(TextOps.tokens("text")).as(Seq("pos", "term")))
       .select(col("doc_id"), col("term"), col("pos").cast("long").as("pos"))
 
-  /** Persist the POSITIONAL postings as a term-bucketed catalog table —
-    * the phrase-query twin of [[writeIndex]]: a k-term phrase lookup
-    * against it prunes to at most k buckets (`SelectedBucketsCount`)
-    * instead of touching the corpus at all.
-    */
-  def writePositionalIndex(docs: DataFrame, tableName: String,
-                           numBuckets: Int = 8): Unit = {
-    graft.engine.Bucketing.dropTableAndLocation(docs.sparkSession, tableName)
-    positionalPostings(docs)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(numBuckets, "term")
-      .sortBy("term")
-      .saveAsTable(tableName)
-  }
-
-  /** The positional index for one immutable fixture corpus, built AT
-    * MOST ONCE per catalog — the staging step of the write-once/
-    * query-many posture [[phraseSearchIndexed]] documents. The table
-    * name carries a fingerprint of `fixtureKey` (the fixture
-    * directory), so indexes for different corpora can never shadow one
-    * another, and `docs` is by-name: when the table already exists the
-    * corpus frame is never even constructed, let alone tokenized or
-    * written. Callers that want the build OUT of a measured query path
-    * stage it up front (SparkEntry.stage); a cold catalog degrades to
-    * build-on-first-probe instead of failing.
-    */
-  def ensurePositionalIndex(spark: org.apache.spark.sql.SparkSession,
-                            fixtureKey: String, docs: => DataFrame,
-                            numBuckets: Int = 8): String = {
-    val fp = graft.engine.Bucketing.fingerprint8(fixtureKey)
-    val tableName = s"graft_pos_idx_$fp"
-    if (!spark.catalog.tableExists(tableName))
-      writePositionalIndex(docs, tableName, numBuckets)
-    tableName
-  }
-
-  /** Phrase matching over an arbitrary positional-postings frame — the
-    * shared core of the ad-hoc and index-backed variants. One pass,
-    * one shuffle: each posting of a phrase term at position p is a
-    * candidate anchor `p - offset` for every offset at which that term
-    * occurs in the phrase (the tiny term→offset table rides along as a
-    * broadcast); an anchor with all k offsets present is an exact
-    * occurrence. No k-way self-join, so the postings input is read
-    * ONCE — against the raw corpus that means a single tokenize rather
-    * than k+1, and the literal-term IN filter sits directly on the
-    * postings scan (bucket-pruning when the input is a
-    * [[writePositionalIndex]] table). Output: one row per matching doc
-    * with its occurrence count and first match position.
+  /** Phrase matching over an arbitrary positional-postings frame
+    * (doc_id, term, pos) — the shared core of the ad-hoc and
+    * segment-served variants, for the phrase's (term, offset) pairs
+    * (offsets need not be dense: an analyzer's stopword leaves a gap).
+    * One pass, one shuffle: each posting of a phrase term at position
+    * p is a candidate anchor `p - offset` for every offset at which
+    * that term occurs in the phrase (the tiny term→offset table rides
+    * along as a broadcast); an anchor with all k offsets present is an
+    * exact occurrence. No k-way self-join, so the postings input is
+    * read ONCE — against the raw corpus that means a single tokenize
+    * rather than k+1, and the literal-term IN filter sits directly on
+    * the postings scan. Output: one row per matching doc with its
+    * occurrence count and first match position.
     */
   private[operators] def phraseFromPostings(posts: DataFrame,
-                                            phrase: Seq[String]): DataFrame = {
-    require(phrase.nonEmpty, "phrase must have at least one term")
+      offsets: Seq[(String, Long)]): DataFrame = {
+    require(offsets.nonEmpty, "phrase must have at least one term")
     val spark = posts.sparkSession
     import spark.implicits._
-    val k = phrase.length
-    val offsets = phrase.zipWithIndex
-      .map { case (t, i) => (t, i.toLong) }.toDF("term", "off")
+    val k = offsets.size
     posts
-      .filter(col("term").isin(phrase.distinct: _*))
-      .join(broadcast(offsets), "term")
+      .filter(col("term").isin(offsets.map(_._1).distinct: _*))
+      .join(broadcast(offsets.toDF("term", "off")), "term")
       .select(col("doc_id"), (col("pos") - col("off")).as("anchor"))
       .filter(col("anchor") >= 0)
       // a position holds exactly one term, so each phrase offset
@@ -277,25 +207,13 @@ object Search {
   /** Exact phrase search over raw documents (ad-hoc, query-once): the
     * corpus is tokenized ONCE into positional postings and matched via
     * the single-shuffle anchor-count core ([[phraseFromPostings]]).
-    * For the query-many posture, build the index once with
-    * [[writePositionalIndex]] and use [[phraseSearchIndexed]], which
-    * never touches the corpus.
+    * For the query-many posture, append the corpus to a segmented
+    * index once ([[ensureBm25Index]]) and use
+    * [[SegmentedIndex.phraseSearch]], which never touches the corpus.
     */
   def phraseSearch(docs: DataFrame, phrase: Seq[String]): DataFrame =
-    phraseFromPostings(positionalPostings(docs), phrase)
-
-  /** Exact phrase search against a persisted positional index: the
-    * literal-term filter prunes the bucketed scan to at most k of the
-    * index's buckets, so per-query cost is proportional to the queried
-    * terms' posting lists — the corpus is never re-read.
-    */
-  def phraseSearchIndexed(spark: org.apache.spark.sql.SparkSession,
-                          tableName: String,
-                          phrase: Seq[String]): DataFrame =
-    // bucket pruning needs auto-bucketed-scan OFF; that is a
-    // session-wide Tuning default (one config for a whole suite), not
-    // a per-call flip that would contaminate later queries' plans
-    phraseFromPostings(spark.table(tableName), phrase)
+    phraseFromPostings(positionalPostings(docs),
+      phrase.zipWithIndex.map { case (t, i) => (t, i.toLong) })
 
   /** BM25 ranking — the scoring Lucene actually runs under the
     * reference's ES queries. `log`-based idf means results are NOT
@@ -311,7 +229,7 @@ object Search {
     // avg_dl as one exact-integer division (never avg()'s running
     // double sum, whose value depends on accumulation order): the
     // score is then shuffle-order-deterministic and bit-identical to
-    // the [[bm25TopKIndexed]] path, whose stats sidecar stores the
+    // [[SegmentedIndex.bm25TopK]], whose manifest headers store the
     // same integers
     val stats = docs.agg(
       count(lit(1)).cast("double").as("n_docs"),
@@ -357,9 +275,10 @@ object Search {
     * q117/q125 sketch-tier contract shape).
     *
     * Scale shape: one postings build filtered to the term (at scale, a
-    * bucket-pruned [[writeIndex]] lookup), a 1-row stats broadcast,
-    * and a top-k sort of ONE term's posting list — the same
-    * total-order-of-scores any search engine's top-k heap computes.
+    * bucket-pruned segment read — [[SegmentedIndex.bm25RankAudit]]),
+    * a 1-row stats broadcast, and a top-k sort of ONE term's posting
+    * list — the same total-order-of-scores any search engine's top-k
+    * heap computes.
     * Output: (doc_id, tf, dl, rank, rank_key, rank_agrees,
     * score_in_bounds) for rank <= k.
     */
@@ -583,6 +502,10 @@ object Search {
       .orderBy("doc_id")
   }
 
+  /** Term search with tf-idf-ish ranking: score(doc) = Σ_terms tf ×
+    * (N / df). Query terms are a literal set → the postings filter
+    * pushes down to the term key; only matching postings are read.
+    */
   def search(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     val p = postings(docs)
     // Corpus size as a broadcast 1-row frame — stays inside the single
@@ -614,176 +537,23 @@ object Search {
       .limit(k)
   }
 
-  /** Persist the FULL BM25 serving index — Lucene's on-disk shape
-    * (what actually sits under the reference's delegated ES queries)
-    * mapped to Spark catalog tables:
-    *
-    *  - `<base>_post` (term, doc_id, tf, dl): the posting lists,
-    *    bucketed + sorted by term, with the per-doc length DL
-    *    denormalized beside tf — Lucene's norms, stored with the
-    *    posting so scoring never joins a doc-keyed side (which would
-    *    re-shuffle every matched posting by doc_id at query time);
-    *  - `<base>_dict` (term, doc_freq): the term dictionary, bucketed
-    *    by term with the SAME bucket count — the df lookup joins the
-    *    pruned postings scan bucket-to-bucket, no exchange;
-    *  - `<base>_stats` (n_docs, total_len): the 1-row corpus sidecar.
-    *
-    * A query then reads ONLY the queried terms' buckets
-    * (`SelectedBucketsCount` — PlanSpec asserts it) and NEVER touches
-    * the corpus: at 100 TB the per-query cost is the queried posting
-    * lists, exactly a search engine's. The corpus is tokenized ONCE
-    * (the dict derives from the persisted postings).
-    */
-  def writeBm25Index(docs: DataFrame, baseName: String,
-                     numBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    Seq("post", "dict", "stats").foreach(sfx =>
-      graft.engine.Bucketing.dropTableAndLocation(spark, s"${baseName}_$sfx"))
-    docs
-      .select(col("doc_id"),
-        expr("bigint(size(split(text, ' ')))").as("dl"),
-        explode(TextOps.tokens("text")).as("term"))
-      .groupBy("term", "doc_id", "dl")
-      .agg(count(lit(1)).as("tf"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .saveAsTable(s"${baseName}_post")
-    spark.table(s"${baseName}_post")
-      .groupBy("term").agg(count(lit(1)).as("doc_freq"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .saveAsTable(s"${baseName}_dict")
-    docs
-      .agg(count(lit(1)).as("n_docs"),
-        sum(expr("bigint(size(split(text, ' ')))")).as("total_len"))
-      .write.format("parquet").mode("overwrite")
-      .saveAsTable(s"${baseName}_stats")
-  }
-
-  /** The BM25 index for one immutable fixture corpus, built AT MOST
-    * ONCE per catalog (same staging contract as
-    * [[ensurePositionalIndex]]; `docs` is by-name so a warm catalog
-    * never constructs the corpus frame). Returns the base table name. */
+  /** The whole-corpus segmented index for one immutable fixture,
+    * built AT MOST ONCE: the corpus appended to a [[SegmentedIndex]]
+    * root as ONE whitespace-analyzed batch with no tombstones, so its
+    * N, totalLen and df equal the raw table's. The root name carries
+    * a fingerprint of `fixtureKey` (the fixture directory); `docs` is
+    * by-name, so a warm root never constructs the corpus frame and
+    * rewrites nothing. SparkEntry.stage builds it up front; a cold
+    * root degrades to build-on-first-probe. Returns the root. */
   def ensureBm25Index(spark: org.apache.spark.sql.SparkSession,
                       fixtureKey: String, docs: => DataFrame,
                       numBuckets: Int = 8): String = {
-    val fp = graft.engine.Bucketing.fingerprint8(fixtureKey)
-    val baseName = s"graft_bm25_$fp"
-    if (!spark.catalog.tableExists(s"${baseName}_stats"))
-      writeBm25Index(docs, baseName, numBuckets)
-    baseName
-  }
-
-  /** Multi-term BM25 top-k served ENTIRELY from a [[writeBm25Index]]
-    * index — the production query path: a bucket-pruned postings scan
-    * joined to the equally-pruned term dictionary (same bucketing —
-    * no exchange on either side), a broadcast 1-row stats sidecar,
-    * one per-doc aggregation of the matched postings, and a
-    * TakeOrderedAndProject top-k (per-partition partial top-k before
-    * the driver merge — never a global sort). Identical scores to the
-    * ad-hoc [[bm25]] (SearchSpec pins equality); the corpus is not in
-    * the plan at all.
-    */
-  def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                      baseName: String, terms: Seq[String], k: Int,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val p = spark.table(s"${baseName}_post")
-      .filter(col("term").isin(terms: _*))
-    val dict = spark.table(s"${baseName}_dict")
-      .filter(col("term").isin(terms: _*))
-    val stats = spark.table(s"${baseName}_stats")
-    p.join(dict, "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("avg_dl",
-        col("total_len").cast("double") / col("n_docs").cast("double"))
-      // cast(n_docs as double) FIRST: the sidecar stores bigints, and
-      // bigint - bigint + 0.5 would run in DECIMAL (SQL 0.5 is a
-      // decimal literal) — a differently-rounded idf than the ad-hoc
-      // [[bm25]] path, whose n_docs enters as double
-      .withColumn("idf", expr(
-        "log((cast(n_docs as double) - doc_freq + 0.5) / " +
-          "(doc_freq + 0.5) + 1.0)"))
-      .withColumn("contrib", expr(
-        s"idf * (tf * ($k1 + 1.0)) / " +
-          s"(tf + $k1 * (1.0 - $b + $b * dl / avg_dl))"))
-      .groupBy("doc_id")
-      .agg(sum("contrib").as("score"), count(lit(1)).as("n_terms_hit"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
-  /** [[bm25RankAudit]] served from the persisted index — the same
-    * single-term production ranking with the same exact integer-ratio
-    * certificate (see [[bm25RankAudit]] for the derivation), but with
-    * tf/dl from the bucket-pruned postings scan, df from the term
-    * dictionary and (N, totalLen) from the stats sidecar: the corpus
-    * never enters the plan, so the oracle (which recomputes from the
-    * raw table) certifies the INDEX faithfully serves the live
-    * ranking. Output schema identical to [[bm25RankAudit]].
-    *
-    * Both selections are DISTRIBUTED top-k (TakeOrderedAndProject),
-    * never a corpus-wide rank window, and `rank_agrees` certifies
-    * BOTH halves of order agreement: the within-page numbering
-    * (rank == rank_exact over the k selected rows) AND top-k
-    * MEMBERSHIP (the doc also appears in the independent top-k under
-    * (rank_key desc, doc_id)) — without the membership check, a
-    * rounding perturbation that swaps a boundary doc in or out of the
-    * score-selected page could renumber consistently inside the
-    * bounded set and mask exactly the disagreement the certificate
-    * exists to flag.
-    */
-  def bm25RankAuditIndexed(spark: org.apache.spark.sql.SparkSession,
-                           baseName: String, term: String, k: Int,
-                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k1 == 1.2 && b == 0.75,
-      "the exact rank_key derivation hardcodes k1=1.2, b=0.75 " +
-        "(rationals 3/10, 9/10); generalize the integer key to change them")
-    val p = spark.table(s"${baseName}_post")
-      .filter(col("term") === lit(term))
-    val dfreq = spark.table(s"${baseName}_dict")
-      .filter(col("term") === lit(term)).select("doc_freq")
-    val stats = spark.table(s"${baseName}_stats")
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("score"), asc("doc_id"))
-    val wx = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("rank_key"), asc("doc_id"))
-    val full = p.crossJoin(broadcast(stats))
-      .crossJoin(broadcast(dfreq))
-      .withColumn("idf", expr(
-        "log((n_docs - doc_freq + 0.5) / (doc_freq + 0.5) + 1.0)"))
-      .withColumn("score", expr(
-        s"idf * (tf * ($k1 + 1.0)) / " +
-          s"(tf + $k1 * (1.0 - $b + $b * dl / (total_len / " +
-          "cast(n_docs as double))))"))
-      .withColumn("rank_key",
-        col("tf").cast("double") /
-          (lit(10L) * col("total_len") * col("tf") +
-            lit(3L) * col("total_len") +
-            lit(9L) * col("n_docs") * col("dl")).cast("double"))
-    // the INDEPENDENT top-k under the exact key order — the
-    // membership witness (k rows, broadcastable)
-    val keyTop = full
-      .orderBy(desc("rank_key"), asc("doc_id")).limit(k)
-      .select(col("doc_id"), lit(true).as("in_key_topk"))
-    // top-k FIRST (TakeOrderedAndProject — distributed partial
-    // top-k under the same (score desc, doc_id) total order), THEN
-    // the rank windows over the k bounded rows: the previous shape
-    // ran a corpus-wide single-partition rank window over the
-    // term's whole posting list. rank/rank_exact values are
-    // unchanged whenever the certificate holds; the membership
-    // conjunct catches the case the bounded windows alone cannot —
-    // the two top-k SETS differing at the boundary
-    full.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(keyTop), Seq("doc_id"), "left")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("rank_exact", row_number().over(wx).cast("long"))
-      .withColumn("rank_agrees", col("rank") === col("rank_exact") &&
-        coalesce(col("in_key_topk"), lit(false)))
-      .withColumn("score_in_bounds",
-        col("score") > 0.0 && col("score") < col("idf") * (k1 + 1.0))
-      .select("doc_id", "tf", "dl", "rank", "rank_key", "rank_agrees",
-        "score_in_bounds")
-      .orderBy("rank")
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_segidx_full_sx7a_" +
+        graft.engine.Bucketing.fingerprint8(fixtureKey)).getPath
+    if (!SegmentedIndex.hasBatch(root, "all"))
+      SegmentedIndex.append(spark, root, docs, "all", nBuckets = numBuckets)
+    root
   }
 
   /** Reciprocal-rank fusion — Elasticsearch 8's `rrf` retriever

@@ -505,10 +505,11 @@ object SegmentedIndex {
     // ranged + sorted: bulk initial builds parallelize across
     // nTasks writers instead of one task, and the term-ordered
     // row groups give the dictionary walk tight footer stats
-    spark.read.schema(org.apache.spark.sql.types.StructType(
-      ImpactsSchema.fields :+ org.apache.spark.sql.types.StructField(
-        "n_docs", org.apache.spark.sql.types.LongType)))
-      .parquet(new java.io.File(segTmp, "_impacts").getPath)
+    graft.engine.Pq.readHidden(spark,
+        Seq(new java.io.File(segTmp, "_impacts").getPath),
+        Some(org.apache.spark.sql.types.StructType(
+          ImpactsSchema.fields :+ org.apache.spark.sql.types.StructField(
+            "n_docs", org.apache.spark.sql.types.LongType))))
       .groupBy("term").agg(sum(col("n_docs")).as("doc_freq"),
         max(col("max_tf")).as("max_tf"))
       .repartitionByRange(nTasks, col("term"))
@@ -537,8 +538,8 @@ object SegmentedIndex {
     // the "x" prefix keeps partition-value TYPE INFERENCE away (a
     // digit-only hex like `73` would infer as an int in one segment
     // and clash with `6B`'s string in another).
-    spark.read.schema(DictSchema)
-      .parquet(new java.io.File(segTmp, "_dict").getPath)
+    graft.engine.Pq.readHidden(spark,
+        Seq(new java.io.File(segTmp, "_dict").getPath), Some(DictSchema))
       .select(col("term"), col("doc_freq").as("weight"))
       .withColumn("pb", concat(lit("x"),
         hex(encode(substring(col("term"), 1, 1), "UTF-8"))))
@@ -563,8 +564,8 @@ object SegmentedIndex {
     // one multi-path scan, not an O(segments) union: the fold needs
     // no segment identity, and a single relation keeps planning cost
     // flat in segment count (r18)
-    Some(spark.read.schema(ImpactsSchema)
-      .parquet(dirs.map(_.getPath): _*)
+    Some(graft.engine.Pq.readHidden(spark, dirs.map(_.getPath),
+        Some(ImpactsSchema))
       .groupBy("term", "blk").agg(max("max_tf").as("max_tf")))
   }
 
@@ -582,8 +583,9 @@ object SegmentedIndex {
     // one multi-path scan (not an O(segments) union) — cross-segment
     // doc_freq is summed by the callers, which never need to know
     // which segment a dictionary row came from (r18)
-    spark.read.schema(DictSchema).parquet(live.map(sg =>
-      new java.io.File(new java.io.File(root, sg.name), "_dict").getPath): _*)
+    graft.engine.Pq.readHidden(spark, live.map(sg =>
+      new java.io.File(new java.io.File(root, sg.name), "_dict").getPath),
+      Some(DictSchema))
   }
 
   /** Stored fields — ES's `_source` / Lucene's stored fields: the
@@ -706,14 +708,20 @@ object SegmentedIndex {
   private[operators] def storedFrame(spark: SparkSession, root: java.io.File,
                           segs: Seq[Seg]): DataFrame =
     segs.filter(_.kind == "seg").map { sg =>
-      graft.engine.Pq.read(spark,
-        new java.io.File(new java.io.File(root, sg.name), "_stored").getPath)
+      storedRead(spark, root, sg)
         .withColumn("seg", lit(sg.name.stripPrefix("seg=")))
       // allowMissingColumns: documents are SPARSE (ES's mapping
       // contract — a document need not contain every mapped field),
       // so a batch that carried fewer columns reads back with nulls
       // in the others instead of failing the union
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** One segment's `_stored` rows, schema inferred once per segment
+    * (its columns are caller data). */
+  private def storedRead(spark: SparkSession, root: java.io.File,
+                         sg: Seg): DataFrame =
+    graft.engine.Pq.readHidden(spark, Seq(new java.io.File(
+      new java.io.File(root, sg.name), "_stored").getPath))
 
   /** GET by id — ES's document fetch, from the index's stored fields:
     * live (tombstone-filtered) rows for the requested ids, the id
@@ -2254,13 +2262,14 @@ object SegmentedIndex {
       val segDir = new java.io.File(root, sg.name)
       val dd = new java.io.File(segDir, "_complete")
       if (dd.isDirectory)
-        spark.read.schema(CompleteSchema).parquet(dd.getPath)
+        graft.engine.Pq.readHidden(spark, Seq(dd.getPath),
+            Some(CompleteSchema))
           .filter(col("pb") === lit(pb) &&
             col("term").startsWith(px))
           .select("term", "weight")
       else
-        spark.read.schema(DictSchema)
-          .parquet(new java.io.File(segDir, "_dict").getPath)
+        graft.engine.Pq.readHidden(spark,
+            Seq(new java.io.File(segDir, "_dict").getPath), Some(DictSchema))
           .select(col("term"), col("doc_freq").as("weight"))
           .filter(col("term").startsWith(px))
     }.reduce(_ unionByName _)
@@ -2313,12 +2322,13 @@ object SegmentedIndex {
       val segDir = new java.io.File(root, sg.name)
       val dd = new java.io.File(segDir, "_complete")
       if (dd.isDirectory)
-        spark.read.schema(CompleteSchema).parquet(dd.getPath)
+        graft.engine.Pq.readHidden(spark, Seq(dd.getPath),
+            Some(CompleteSchema))
           .filter(col("pb") === lit(pb) && fuzzyCond)
           .select("term", "weight")
       else
-        spark.read.schema(DictSchema)
-          .parquet(new java.io.File(segDir, "_dict").getPath)
+        graft.engine.Pq.readHidden(spark,
+            Seq(new java.io.File(segDir, "_dict").getPath), Some(DictSchema))
           .select(col("term"), col("doc_freq").as("weight"))
           .filter(fuzzyCond)
     }.reduce(_ unionByName _)
@@ -2389,8 +2399,7 @@ object SegmentedIndex {
     // stored schema lacks either field contributes nothing (sparse
     // batches — the same nulls the storedFrame union would produce).
     def storedSlice(sg: Seg): DataFrame = {
-      val st = graft.engine.Pq.read(spark, new java.io.File(
-        new java.io.File(root, sg.name), "_stored").getPath)
+      val st = storedRead(spark, root, sg)
       if (!st.columns.contains(inputField) ||
         !st.columns.contains(weightField))
         return Seq.empty[(String, Long, Long, String)]
@@ -2414,7 +2423,8 @@ object SegmentedIndex {
         new java.io.File(root, sg.name), "_cfield")
       val slice =
         if (mapped && cdir.isDirectory)
-          spark.read.schema(CFieldSchema).parquet(cdir.getPath)
+          graft.engine.Pq.readHidden(spark, Seq(cdir.getPath),
+              Some(CFieldSchema))
             .filter(col("pb") === lit(pb) &&
               col("input").startsWith(px))
             .select("input", "weight", "doc_id", "ctx")
@@ -4295,9 +4305,8 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val live = segs.filter(_.kind == "seg")
     val fields = live.flatMap { sg =>
-      graft.engine.Pq.read(spark, new java.io.File(
-        new java.io.File(root, sg.name), "_stored").getPath)
-        .schema.fields.map(f => (f.name, f.dataType.simpleString))
+      storedRead(spark, root, sg).schema.fields
+        .map(f => (f.name, f.dataType.simpleString))
     }
     fields.groupBy(identity).map { case ((name, dt), occ) =>
       (name, dt, name == "text", true, occ.size.toLong)
@@ -4468,8 +4477,7 @@ object SegmentedIndex {
     if (live0.isEmpty)
       return Seq.empty[(Long, Double)].toDF("doc_id", "score")
     val stored = live0.map { sg =>
-      val st = graft.engine.Pq.read(spark, new java.io.File(
-        new java.io.File(root, sg.name), "_stored").getPath)
+      val st = storedRead(spark, root, sg)
       (if (st.columns.contains(field))
         st.select(col("doc_id").cast("long").as("doc_id"),
           col(field).isNotNull.as("has"))
@@ -6747,19 +6755,29 @@ object SegmentedIndex {
   private def bm25ScoreBody(live: DataFrame, dfreq: DataFrame,
       nDocs: Long, totalLen: Long, k1: Double,
       b: Double): DataFrame =
-    live.join(dfreq, "term")
+    bm25Contrib(live.join(dfreq, "term"), nDocs, totalLen, k1, b)
+      .groupBy("doc_id")
+      .agg(sum("contrib").as("score"), count(lit(1)).as("n_terms_hit"))
+
+  /** Per-posting `idf` and saturated `contrib` columns over postings
+    * that carry (tf, dl, doc_freq) — the one BM25 expression every
+    * segment-tier scorer evaluates, so [[bm25RankAudit]]'s single-term
+    * score is [[bm25ScoreBody]]'s per-doc sum bit for bit. */
+  private def bm25Contrib(posts: DataFrame, nDocs: Long, totalLen: Long,
+      k1: Double, b: Double): DataFrame =
+    posts
       .withColumn("avg_dl",
         lit(totalLen).cast("double") / lit(nDocs).cast("double"))
-      // cast to double FIRST — the decimal-literal pitfall documented
-      // at [[Search.bm25TopKIndexed]]
+      // cast n_docs to double FIRST: bigint - bigint + 0.5 would run in
+      // DECIMAL (SQL 0.5 is a decimal literal) and round the idf
+      // differently from the ad-hoc [[Search.bm25]], whose n_docs
+      // enters as double
       .withColumn("idf", expr(
         s"log((cast(${nDocs}L as double) - doc_freq + 0.5) / " +
           "(doc_freq + 0.5) + 1.0)"))
       .withColumn("contrib", expr(
         s"idf * (tf * ($k1 + 1.0)) / " +
           s"(tf + $k1 * (1.0 - $b + $b * dl / avg_dl))"))
-      .groupBy("doc_id")
-      .agg(sum("contrib").as("score"), count(lit(1)).as("n_terms_hit"))
 
   /** BM25 top-k with WAND/MaxScore dynamic pruning — the PRODUCTION
     * scorer under [[maxScoreSearch]]'s two-phase exactness argument,
@@ -6934,14 +6952,10 @@ object SegmentedIndex {
         .as("tf_a"),
       sum(when(col("term") === lit(tb), col("tf")).otherwise(lit(0L)))
         .as("tf_b"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("score"), asc("doc_id"))
-    val wx = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("rank_key"), asc("doc_id"))
     // certificate key on the FULL pair hit set (doubles with the
     // PRODUCT envelope guard — the [[Search.bm25PairRankAudit]]
-    // posture exactly), so the independent key-ordered top-k below
-    // can witness MEMBERSHIP, not just within-page numbering
+    // posture exactly), so the independent key-ordered top-k can
+    // witness MEMBERSHIP, not just within-page numbering
     val keyed = tfp
       .withColumn("term_a", lit(ta))
       .withColumn("term_b", lit(tb))
@@ -6965,21 +6979,41 @@ object SegmentedIndex {
             "certificate cannot hold at this corpus scale')")
             .cast("double"))
           .otherwise(col("rank_num") / (col("da") * col("db"))))
-    val keyTop = keyed
-      .orderBy(desc("rank_key"), asc("doc_id")).limit(k)
-      .select(col("doc_id"), lit(true).as("in_key_topk"))
-    pruned.join(keyed, "doc_id")
-      .join(broadcast(keyTop), Seq("doc_id"), "left")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("rank_exact", row_number().over(wx).cast("long"))
-      .withColumn("rank_agrees", col("rank") === col("rank_exact") &&
-        coalesce(col("in_key_topk"), lit(false)))
+    certifyRanks(pruned.join(keyed, "doc_id"), keyed, k)
       .withColumn("score_in_bounds",
         col("score") > 0.0 &&
           col("score") < lit(2.0 * idfShared * (k1 + 1.0)))
       .select("doc_id", "term_a", "term_b", "tf_a", "tf_b", "dl",
         "rank", "rank_key", "rank_agrees", "score_in_bounds")
       .orderBy("rank")
+  }
+
+  /** The rank certificate over a top-k `page` of (doc_id, score,
+    * rank_key, …) rows: `rank` numbers the page under (score desc,
+    * doc_id), `rank_exact` under (rank_key desc, doc_id), and
+    * `rank_agrees` holds when the two agree AND the doc is in the
+    * independent key-ordered top-k of `keyed` (every candidate with
+    * its rank_key). Without that membership check, a rounding
+    * perturbation that swaps a boundary doc in or out of the
+    * score-selected page could renumber consistently inside the
+    * bounded page and mask exactly the disagreement the certificate
+    * exists to flag. The key top-k is a distributed
+    * TakeOrderedAndProject and the windows number k bounded rows —
+    * never a corpus-wide rank window. */
+  private def certifyRanks(page: DataFrame, keyed: DataFrame,
+                           k: Int): DataFrame = {
+    val keyTop = keyed
+      .orderBy(desc("rank_key"), asc("doc_id")).limit(k)
+      .select(col("doc_id"), lit(true).as("in_key_topk"))
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(desc("score"), asc("doc_id"))
+    val wx = org.apache.spark.sql.expressions.Window
+      .orderBy(desc("rank_key"), asc("doc_id"))
+    page.join(broadcast(keyTop), Seq("doc_id"), "left")
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("rank_exact", row_number().over(wx).cast("long"))
+      .withColumn("rank_agrees", col("rank") === col("rank_exact") &&
+        coalesce(col("in_key_topk"), lit(false)))
   }
 
   /** Single-term BM25 over the segmented index with its exact
@@ -6991,10 +7025,11 @@ object SegmentedIndex {
     * hit list excludes tombstoned docs immediately. tf and dl ride in
     * the pruned postings rows; the corpus is never read. Output
     * schema identical to [[Search.bm25RankAudit]]; the k1=1.2/b=0.75
-    * integer-key derivation is documented there. `rank_agrees`
-    * certifies within-page numbering AND top-k membership against an
-    * independent key-ordered top-k ([[Search.bm25RankAuditIndexed]]
-    * documents why the bounded windows alone are not enough).
+    * integer-key derivation is documented there. ONE frame carries
+    * both orders — the live postings joined to the broadcast 1-row
+    * df, scored by [[bm25Contrib]] (one term: [[bm25TopK]]'s per-doc
+    * sum IS the posting's contribution) and keyed by the exact ratio
+    * — and both top-k's are taken off it ([[certifyRanks]]).
     */
   def bm25RankAudit(spark: SparkSession, rootDir: String, term: String,
                     k: Int, k1: Double = 1.2,
@@ -7007,7 +7042,7 @@ object SegmentedIndex {
     require(qs.nonEmpty,
       s"'$term' analyzes to no term under the index's analyzer")
     val qt = qs.head
-    val (nb, segs, gen) = readManifest(root)
+    val (nb, segs, _) = readManifest(root)
     val nDocs = segs.filter(_.kind == "seg").map(_.nDocs).sum
     val totalLen = segs.filter(_.kind == "seg").map(_.totalLen).sum
     val p = prunedPostings(spark, root, segs, Seq(qt), nb)
@@ -7018,27 +7053,16 @@ object SegmentedIndex {
         p.join(dead, Seq("doc_id", "seg"), "left_anti")
       case None => p
     }
-    // the top-k SELECTION is the PRUNED production scorer's
-    // (TakeOrderedAndProject top-k — distributed partial top-k, the
-    // corpus-wide single-partition rank window this audit used to
-    // run is gone); its score is bit-identical to the certificate's
-    // own expression (shared arithmetic shape — the spec pins the
-    // emitted rows unchanged), so the windows below number k
-    // BOUNDED rows, the [[Search.rrfFuse]] posture
-    val top = bm25MaxScoreTopK(spark, rootDir, Seq(qt), k, k1, b)
-      .select(col("doc_id"), col("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("score"), asc("doc_id"))
-    val wx = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("rank_key"), asc("doc_id"))
     // the denominator is computed in DOUBLE, not Long — correctly
     // rounded at any magnitude (bit-identical inside the 2^53
     // envelope) where the Long sum would silently wrap at 2^63 —
     // and an input beyond the exact-integer envelope fails the
     // audit LOUDLY ([[Search.bm25PairRankAudit]]'s contract; the
-    // guard runs over the FULL live posting list, since the exact-
-    // order claim is corpus-wide).
-    val keyed = live
+    // key-ordered top-k evaluates the guard on EVERY live posting,
+    // since the exact-order claim is corpus-wide)
+    val full = bm25Contrib(live.crossJoin(broadcast(dfreq)),
+        nDocs, totalLen, k1, b)
+      .withColumnRenamed("contrib", "score")
       .withColumn("rank_den",
         lit(10.0d) * lit(totalLen.toDouble) * col("tf").cast("double") +
           lit(3.0d) * lit(totalLen.toDouble) +
@@ -7050,27 +7074,10 @@ object SegmentedIndex {
             "certificate cannot hold at this corpus scale')")
             .cast("double"))
           .otherwise(col("tf").cast("double") / col("rank_den")))
-    // the INDEPENDENT top-k under the exact key order (another
-    // distributed TakeOrderedAndProject, k rows): `rank_agrees`
-    // certifies within-page numbering AND top-k membership — the
-    // bounded windows alone could renumber consistently after a
-    // boundary swap and mask exactly what the certificate flags
-    val keyTop = keyed
-      .orderBy(desc("rank_key"), asc("doc_id")).limit(k)
-      .select(col("doc_id"), lit(true).as("in_key_topk"))
-    keyed.join(top, "doc_id")
-      .crossJoin(broadcast(dfreq))
-      .withColumn("idf", expr(
-        s"log((cast(${nDocs}L as double) - doc_freq + 0.5) / " +
-          "(doc_freq + 0.5) + 1.0)"))
-      .join(broadcast(keyTop), Seq("doc_id"), "left")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("rank_exact", row_number().over(wx).cast("long"))
-      .withColumn("rank_agrees", col("rank") === col("rank_exact") &&
-        coalesce(col("in_key_topk"), lit(false)))
+    certifyRanks(full.orderBy(desc("score"), asc("doc_id")).limit(k),
+        full, k)
       .withColumn("score_in_bounds",
         col("score") > 0.0 && col("score") < col("idf") * (k1 + 1.0))
-      .filter(col("rank") <= k)
       .select("doc_id", "tf", "dl", "rank", "rank_key", "rank_agrees",
         "score_in_bounds")
       .orderBy("rank")
@@ -7344,7 +7351,7 @@ object SegmentedIndex {
     require(phrase.nonEmpty, "phrase must have at least one term")
     import spark.implicits._
     val root = new java.io.File(rootDir)
-    val (nb, segs, gen) = readManifest(root)
+    val (nb, segs, _) = readManifest(root)
     // the query phrase analyzes with the index's chain, POSITIONS
     // INCLUDED: a stopword inside the phrase leaves a GAP the match
     // must respect — ES's match_phrase under the english analyzer
@@ -7364,24 +7371,8 @@ object SegmentedIndex {
         p.join(dead, Seq("doc_id", "seg"), "left_anti")
       case None => p
     }
-    // the anchor-count core generalized to explicit (term, off)
-    // pairs: one term per position means each pair contributes at
-    // most one row per (doc, anchor), so count == |pairs| IS "every
-    // offset matched" — Search.phraseFromPostings' exact argument
-    val k = offsets.size
-    val offDf = offsets.toDF("term", "off")
-    live.select(col("doc_id"), col("term"),
-        explode(col("positions")).as("pos"))
-      .join(broadcast(offDf), "term")
-      .select(col("doc_id"), (col("pos") - col("off")).as("anchor"))
-      .filter(col("anchor") >= 0)
-      .groupBy("doc_id", "anchor")
-      .agg(count(lit(1)).as("n_hit"))
-      .filter(col("n_hit") === lit(k.toLong))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_occurrences"),
-        min("anchor").as("first_pos"))
-      .orderBy("doc_id")
+    Search.phraseFromPostings(live.select(col("doc_id"), col("term"),
+      explode(col("positions")).as("pos")), offsets)
   }
 
   /** Phrase-prefix query — ES's `match_phrase_prefix`, THE

@@ -617,7 +617,7 @@ object Similarity {
 
   /** The learned-centroid IVF index STAGED — the write-once half of
     * [[ivfTopKStaged]], built AT MOST ONCE per (fixture, centroid
-    * seed, dim), same contract as `Search.ensurePositionalIndex`:
+    * seed, dim), same contract as [[Search.ensureBm25Index]]:
     * one Lloyd M-step learns the coarse quantizer from the corpus,
     * the k learned centroids persist as a tiny catalog table, and the
     * assigned corpus — (vec_id, dvec, nv, norm, cluster) — is written

@@ -29,10 +29,11 @@ object LlmSurface {
     * searchAfter, maxscore, bm25 audit, fuzzy, phrase, highlight,
     * bool, facet, histogram, significant terms, sorted search, term
     * vectors, PIT): one shared build instead of a per-invocation
-    * rebuild, mirroring `ensureBm25Index`'s build-cost-is-ingest
-    * posture. Standard lifecycle — two appends + one tombstone batch
-    * over the bounded corpus (q150's rule) — so every oracle's
-    * `doc_id % 37 <> 5` live-set filter holds. Idempotent at zero
+    * rebuild, mirroring [[Search.ensureBm25Index]]'s
+    * build-cost-is-ingest posture. Standard lifecycle — two appends +
+    * one tombstone batch over the bounded corpus (q150's rule) — so
+    * every oracle's `doc_id % 37 <> 5` live-set filter holds.
+    * Idempotent at zero
     * marginal cost: append/delete batch-key guards make warm
     * re-invocations manifest-parse-only no-ops. MUTATING queries
     * (upsert, merge, snapshot, reindex, delete-by-query, rebase)
@@ -718,19 +719,18 @@ object LlmSurface {
       Search.bm25PairRankAudit(docs(s, d), k = 20)),
 
     // --- BM25 served from the PERSISTED index (Lucene's on-disk
-    //     shape as catalog tables: term-bucketed postings with the
-    //     dl norm denormalized, a term dictionary, a 1-row stats
-    //     sidecar — staged once by SparkEntry.stage): q156's exact
-    //     integer-ratio rank certificate, but the corpus is not in
-    //     the plan at all — tf/dl come from the bucket-pruned
-    //     postings scan, df from the dictionary, (N, totalLen) from
-    //     the sidecar. The oracle recomputes from the raw table, so
-    //     a hash match certifies the index faithfully serves the
-    //     live ranking (Search.bm25RankAuditIndexed) ---
-    "q164_bm25_indexed" -> ((s, d) => {
-      val idx = Search.ensureBm25Index(s, d, docs(s, d), numBuckets = 8)
-      Search.bm25RankAuditIndexed(s, idx, "data", k = 20)
-    }),
+    //     shape: the whole corpus as one segment of term-bucketed
+    //     postings with the dl norm inline, no tombstones — staged
+    //     once by SparkEntry.stage): q156's exact integer-ratio rank
+    //     certificate, but the corpus is not in the plan at all —
+    //     tf/dl/df come from the bucket-pruned postings scan,
+    //     (N, totalLen) from the manifest header. The oracle
+    //     recomputes from the raw table, so a hash match certifies
+    //     the index faithfully serves the live ranking
+    //     (SegmentedIndex.bm25RankAudit) ---
+    "q164_bm25_indexed" -> ((s, d) =>
+      SegmentedIndex.bm25RankAudit(s,
+        Search.ensureBm25Index(s, d, docs(s, d)), "data", k = 20)),
 
     // --- SEGMENTED full-text index, pre-merge phase (Lucene's
     //     segment + live-docs architecture — what actually sits under
@@ -3062,16 +3062,17 @@ object LlmSurface {
     "q105_phrase_search" -> ((s, d) =>
       Search.phraseSearch(docs(s, d), Seq("big", "order", "scan"))),
 
-    // --- the same phrase query in the query-many posture: postings
-    //     persisted once as a term-bucketed index (staged up front by
-    //     SparkEntry.stage; built on first probe only on a cold
-    //     catalog), per-query scan pruned to the phrase terms' buckets
-    //     — the corpus is never re-read, and a staged invocation is
+    // --- the same phrase query in the query-many posture: positional
+    //     postings persisted once in the whole-corpus segment
+    //     (Search.ensureBm25Index, staged up front by
+    //     SparkEntry.stage; built on first probe only when cold),
+    //     per-query scan pruned to the phrase terms' buckets — the
+    //     corpus is never re-read, and a staged invocation is
     //     probe-only: no tokenize, no write ---
-    "q105b_phrase_indexed" -> ((s, d) => {
-      val idx = Search.ensurePositionalIndex(s, d, docs(s, d), numBuckets = 8)
-      Search.phraseSearchIndexed(s, idx, Seq("big", "order", "scan"))
-    }),
+    "q105b_phrase_indexed" -> ((s, d) =>
+      SegmentedIndex.phraseSearch(s,
+        Search.ensureBm25Index(s, d, docs(s, d)),
+        Seq("big", "order", "scan"))),
 
     // --- repeated-span detection: n-token windows occurring >1 time
     //     corpus-wide — the exact-substring-dedup / memorization

@@ -36,26 +36,6 @@ class SearchSpec extends SparkSpec {
     assert(first.map(_._1) == first.map(_._1).sorted)
   }
 
-  test("bucketed index lookup prunes to the terms' buckets") {
-    spark.sql("DROP TABLE IF EXISTS idx_b")
-    val loc = new java.io.File("spark-warehouse/idx_b")
-    if (loc.exists()) { loc.listFiles().foreach(_.delete()); loc.delete() }
-    val docsDf = spark.read.parquet(s"$sf001/documents.parquet")
-    Search.writeIndex(docsDf, "idx_b", numBuckets = 8)
-    val hits = Search.lookup(spark, "idx_b", Seq("spark", "join"))
-    hits.collect()
-    val plan = hits.queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount"), plan.take(900))
-    val sel = "SelectedBucketsCount: (\\d+) out of 8".r
-      .findFirstMatchIn(plan).map(_.group(1).toInt)
-    assert(sel.exists(_ <= 2), s"expected <=2 buckets scanned: $plan")
-    // results match the direct postings computation
-    val direct = Search.postings(docsDf)
-      .filter(col("term").isin("spark", "join"))
-      .as[(String, Long, Long)].collect().toSet
-    assert(hits.as[(String, Long, Long)].collect().toSet == direct)
-  }
-
   test("tf-idf search ranks tf-heavy docs first, rare terms weigh more") {
     val hits = Search.search(docs, Seq("spark", "rare"), k = 10)
       .select("doc_id", "score").as[(Long, Double)].collect()
@@ -196,51 +176,6 @@ class SearchSpec extends SparkSpec {
     assert(hits(2L) == ((1L, 1L, 3L)))
     assert(hits(3L) == ((1L, 1L, 3L)))  // rare×1
     assert(out.forall(_._5), "saturation contract must certify")
-  }
-
-  test("bm25 indexed serving: topK and rank audit from the persisted " +
-    "index equal the ad-hoc corpus-scan paths exactly") {
-    val corpus = Seq(
-      (1L, "x x x pad"),
-      (2L, "x pad pad pad"),
-      (3L, "x x pad pad pad pad pad pad"),
-      (4L, "pad only y"),
-      (5L, "x pad pad pad"))
-      .toDF("doc_id", "text")
-    val base = "graft_bm25_spec_" + java.util.UUID.randomUUID()
-      .toString.take(8)
-    try {
-      Search.writeBm25Index(corpus, base, numBuckets = 4)
-      // the index never re-reads the corpus: stats/dict/postings agree
-      // with the live frames
-      val st = spark.table(s"${base}_stats")
-        .as[(Long, Long)].collect().head
-      assert(st == ((5L, 23L)), s"stats: $st")
-      val topIdx = Search.bm25TopKIndexed(spark, base,
-          Seq("x", "y"), k = 10)
-        .as[(Long, Double, Long)].collect().toSeq
-      val topAdHoc = Search.bm25(corpus, Seq("x", "y"), k = 10)
-        .as[(Long, Double, Long)].collect().toSeq
-      assert(topIdx == topAdHoc,
-        s"indexed/ad-hoc diverge:\n$topIdx\n$topAdHoc")
-      val audIdx = Search.bm25RankAuditIndexed(spark, base, "x", k = 10)
-        .as[(Long, Long, Long, Long, Double, Boolean, Boolean)]
-        .collect().toSeq
-      val audAdHoc = Search.bm25RankAudit(corpus, "x", k = 10)
-        .as[(Long, Long, Long, Long, Double, Boolean, Boolean)]
-        .collect().toSeq
-      assert(audIdx == audAdHoc,
-        s"audit indexed/ad-hoc diverge:\n$audIdx\n$audAdHoc")
-      assert(audIdx.forall(r => r._6 && r._7),
-        "certificates must hold on the indexed path")
-      // the top-k selection is a distributed TakeOrderedAndProject;
-      // the rank windows run over the k bounded rows only (the
-      // corpus-wide single-partition window is gone)
-      val plan = Search.bm25RankAuditIndexed(spark, base, "x", k = 10)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("TakeOrderedAndProject"), plan)
-    } finally Seq("post", "dict", "stats").foreach(sfx =>
-      graft.engine.Bucketing.dropTableAndLocation(spark, s"${base}_$sfx"))
   }
 
   test("phraseSearch: counts in-order adjacent occurrences per doc") {

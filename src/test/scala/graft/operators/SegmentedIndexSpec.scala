@@ -25,6 +25,43 @@ class SegmentedIndexSpec extends SparkSpec {
     root
   }
 
+  test("segment artifact reads log no 'All paths were ignored' " +
+    "warning: ingest, delete, search, fetch and fuzzy on a fresh index") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-spec-ignored-paths", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    rootLogger.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    val hits = try {
+      val root = freshIndex()
+      SegmentedIndex.delete(spark, root, Seq(2L).toDF("doc_id"), "d1")
+      Seq(SegmentedIndex.search(spark, root, Seq("x", "y"), 10),
+        SegmentedIndex.fetch(spark, root, Seq(1L, 3L)),
+        SegmentedIndex.fuzzySearch(spark, root, Seq("yy"), k = 5))
+        .map(_.collect().length)
+    } finally {
+      rootLogger.removeAppender(app.getName)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    // the calls really read the artifacts: hits, stored rows, and a
+    // dictionary-resolved fuzzy expansion
+    assert(hits == Seq(2, 2, 2), hits.toString)
+    import scala.jdk.CollectionConverters._
+    val ignored = seen.asScala.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
   test("append is idempotent per batch key; segments count once") {
     val root = freshIndex()
     SegmentedIndex.append(spark, root,
@@ -500,9 +537,10 @@ class SegmentedIndexSpec extends SparkSpec {
     assert(SegmentedIndex
       .bm25ExhaustiveTopK(spark, root, Seq("x", "y"), 10)
       .as[(Long, Double, Long)].collect().toSeq == want)
-    // the rank audit serves through the pruned scorer now: rows
-    // unchanged vs the ad-hoc audit, and the top-k selection is a
-    // TakeOrderedAndProject (the corpus-wide rank window is gone)
+    // the rank audit scores the live postings with the production
+    // BM25 expression on one frame: rows equal the ad-hoc audit's, and
+    // the top-k selection is a TakeOrderedAndProject (no corpus-wide
+    // rank window)
     val aud = SegmentedIndex.bm25RankAudit(spark, root, "x", k = 10)
     assert(aud
       .as[(Long, Long, Long, Long, Double, Boolean, Boolean)]

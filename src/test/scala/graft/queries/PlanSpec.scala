@@ -228,73 +228,94 @@ class PlanSpec extends SparkSpec {
       "phrase match degenerated to a non-equi join")
   }
 
+  /** The term buckets each file scan of a segment plan may read: one
+    * set per scan line, parsed from its `tb` PartitionFilters
+    * (`tb IN (…)`, or `tb = n` once the optimizer folds a one-value
+    * IN). A scan without a `tb` filter yields an empty set. */
+  private def tbBuckets(p: String): Seq[Set[Int]] =
+    p.linesIterator.filter(_.contains("FileScan")).map { l =>
+      val pf = "PartitionFilters: \\[([^\\]]*)\\]".r
+        .findFirstMatchIn(l).map(_.group(1)).getOrElse("")
+      ("tb#\\d+ IN \\(([^)]*)\\)".r.findAllMatchIn(pf)
+        .flatMap(_.group(1).split(",").map(_.trim.toInt)) ++
+        "tb#\\d+ = (\\d+)".r.findAllMatchIn(pf).map(_.group(1).toInt))
+        .toSet
+    }.toSeq
+
+  /** The term-bucket count of the whole-corpus segment root behind
+    * q164/q105b (staged on first use), as laid out on disk. */
+  private def fullRootBuckets(): Int = {
+    val root = graft.operators.Search.ensureBm25Index(spark, sf001,
+      graft.engine.Tables.table(spark, sf001, "documents"))
+    val segs = new java.io.File(root).listFiles()
+      .filter(_.getName.startsWith("seg="))
+    assert(segs.length == 1, s"expected one segment under $root")
+    segs.head.listFiles().count(_.getName.startsWith("tb="))
+  }
+
   test("q105b: indexed phrase query prunes the bucketed postings scan") {
     val df = SparkEntry.queries("q105b_phrase_indexed")(spark, sf001)
     df.collect() // finalize the adaptive plan
     val p = df.queryExecution.executedPlan.toString
-    // the scan reads only the buckets holding the 3 phrase terms —
-    // never the corpus, never all 8 buckets
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(p)
-    assert(sel.isDefined, s"no bucket pruning in plan:\n${p.take(1500)}")
-    val (nSel, nAll) = (sel.get.group(1).toInt, sel.get.group(2).toInt)
-    assert(nAll == 8 && nSel <= 3,
-      s"expected <=3 of 8 buckets, scanned $nSel of $nAll")
-    // and no Generate at all: the corpus is not re-tokenized
-    assert(!p.contains("Generate"),
-      s"indexed phrase query re-tokenized the corpus:\n${p.take(1500)}")
+    assert(fullRootBuckets() == 8, "the staged root must hold 8 term buckets")
+    // every scan is a postings scan that reads only the buckets
+    // holding the 3 phrase terms — never all 8
+    val scans = tbBuckets(p)
+    assert(scans.nonEmpty, s"no postings scan in plan:\n${p.take(1500)}")
+    scans.foreach(b => assert(b.nonEmpty && b.size <= 3 &&
+      b.forall(x => x >= 0 && x < 8),
+      s"expected <=3 of 8 buckets, scanned $b:\n${p.take(1500)}"))
+    // and the corpus is not re-tokenized: positions come from the
+    // index, the documents table is never scanned
+    assert(!p.contains("documents.parquet"),
+      s"indexed phrase query scanned the corpus:\n${p.take(1500)}")
   }
 
-  test("q164: indexed BM25 prunes the postings AND dictionary scans " +
-    "to the term's bucket; the corpus is not in the plan") {
+  test("q164: indexed BM25 prunes every postings scan to the term's " +
+    "bucket; the corpus is not in the plan") {
     val df = SparkEntry.queries("q164_bm25_indexed")(spark, sf001)
     df.collect() // finalize the adaptive plan
     val p = df.queryExecution.executedPlan.toString
-    val sels = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(p).toSeq
-    // postings + dictionary are both term-bucketed reads of ONE term
-    assert(sels.size >= 2,
-      s"expected 2 bucket-pruned scans, got ${sels.size}:\n${p.take(1500)}")
-    sels.foreach { m =>
-      assert(m.group(2).toInt == 8 && m.group(1).toInt <= 1,
-        s"expected <=1 of 8 buckets, got ${m.group(1)} of ${m.group(2)}")
-    }
-    // the corpus never enters the plan: no tokenize explode, no
-    // documents.parquet scan — tf/dl/df/stats all come from the index
-    assert(!p.contains("Generate"),
-      s"indexed BM25 re-tokenized the corpus:\n${p.take(1500)}")
+    assert(fullRootBuckets() == 8, "the staged root must hold 8 term buckets")
+    // tf, dl and df all come from the postings of ONE term: every
+    // scan is a postings scan of one of the 8 buckets
+    val scans = tbBuckets(p)
+    assert(scans.nonEmpty, s"no postings scan in plan:\n${p.take(1500)}")
+    scans.foreach(b => assert(b.size == 1 && b.forall(x => x >= 0 && x < 8),
+      s"expected 1 of 8 buckets, scanned $b:\n${p.take(1500)}"))
+    // N and totalLen are manifest literals: no documents.parquet scan
     assert(!p.contains("documents.parquet"),
       s"indexed BM25 scanned the corpus:\n${p.take(1500)}")
   }
 
   test("q105b: a staged invocation is probe-only — no index rebuild, " +
     "no documents scan") {
-    // first invocation stages (or reuses) the fixture-keyed index
+    // first invocations stage (or reuse) the fixture-keyed root
     SparkEntry.queries("q105b_phrase_indexed")(spark, sf001).collect()
-    val idx = graft.operators.Search.ensurePositionalIndex(spark, sf001,
-      fail("staged index missing: ensure re-built on second call"))
+    SparkEntry.queries("q164_bm25_indexed")(spark, sf001).collect()
+    val root = graft.operators.Search.ensureBm25Index(spark, sf001,
+      fail("staged index missing: ensure re-built on a warm call"))
     def indexFiles(): Map[String, Long] = {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val root = if (wh.contains(":"))
-        new java.io.File(new java.net.URI(wh).getPath)
-      else new java.io.File(wh)
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(root, idx))
+      walk(new java.io.File(root))
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = indexFiles()
-    assert(before.nonEmpty, s"no files under staged index $idx")
-    val df = SparkEntry.queries("q105b_phrase_indexed")(spark, sf001)
-    df.collect()
-    // the repeated invocation neither dropped nor rewrote the index…
+    assert(before.nonEmpty, s"no files under staged index $root")
+    val dfs = Seq("q105b_phrase_indexed", "q164_bm25_indexed")
+      .map(q => SparkEntry.queries(q)(spark, sf001))
+    dfs.foreach(_.collect())
+    // the repeated invocations neither rewrote nor added a file…
     assert(indexFiles() == before,
-      "staged q105b invocation rewrote the positional index")
-    // …and its plan reads ONLY the index table — the corpus parquet
-    // never appears
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("documents.parquet"),
-      s"staged phrase probe still scans the corpus:\n${p.take(1500)}")
+      "a staged q105b/q164 invocation rewrote the segment root")
+    // …and their plans read ONLY the index — the corpus parquet never
+    // appears
+    dfs.foreach { df =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("documents.parquet"),
+        s"staged probe still scans the corpus:\n${p.take(1500)}")
+    }
   }
 
   test("q121: z-ordered layout skips — the clustered copy's scan reads " +
