@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
@@ -14,9 +15,13 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * As a main it holds the measurement modes:
   *   - `probe <sfDir> <reps> q...` times each entry `reps` times under
-  *     [[materialize]] and prints `name rep sec jobs` per rep; the last
-  *     rep also prints every Spark job it ran (start offset, duration,
-  *     description), the local stand-in for the Spark UI's Jobs page.
+  *     [[materialize]] and prints `name rep sec cpu_ms jobs` per rep
+  *     (`cpu_ms`: CPU time of the JVM's Java threads, the benchmark's
+  *     `cpu_ms_per_op` definition); the last rep also prints every Spark
+  *     job it ran (start offset, duration, description), the local
+  *     stand-in for the Spark UI's Jobs page. Each rep runs under the
+  *     job description `<name> rep <rep>`, so its jobs, AQE stage jobs
+  *     included, carry the entry's name.
   *   - `plan <sfDir> <suffix> q...` writes each entry's [[finalPlan]] to
   *     `plans/<name>_<suffix>.txt`, so a before/after plan diff can back
   *     an optimization claim.
@@ -68,6 +73,15 @@ object Run {
   def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Runs `body` with `label` as the description of every Spark job it
+    * starts, then clears it. AQE's query-stage jobs inherit the calling
+    * thread's local properties, so they carry the label too, not the
+    * call site `CompletableFuture.java`. */
+  def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    spark.sparkContext.setJobDescription(label)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
   /** The formatted physical plan AFTER adaptive execution finalized it
     * (collect first, explain second), then clears the operators'
     * per-invocation caches. */
@@ -97,13 +111,15 @@ object Run {
     val jobs = new JobLog
     spark.sparkContext.addSparkListener(jobs)
     for ((name, fn) <- entries; rep <- 1 to reps) {
+      val cpu0 = threadCpu()
       val t0 = System.nanoTime()
-      val err = try { materialize(fn(spark, sfDir)); None }
+      val err = try { labelled(spark, s"$name rep $rep")(materialize(fn(spark, sfDir))); None }
       catch { case e: Throwable => Some(e.toString.linesIterator.next().take(160)) }
       val sec = (System.nanoTime() - t0) / 1e9
+      val cpuMs = cpuMsSince(cpu0)
       val ran = jobs.drain()
       spark.catalog.clearCache()
-      println(f"$name%s $rep%d $sec%.3f ${ran.size}%d${err.fold("")(" ERR " + _)}")
+      println(f"$name%s $rep%d $sec%.3f $cpuMs%.0f ${ran.size}%d${err.fold("")(" ERR " + _)}")
       if (rep == reps) {
         val first = ran.map(_.startMs).minOption.getOrElse(0L)
         ran.foreach { j =>
@@ -127,6 +143,20 @@ object Run {
     }
     spark.stop()
   }
+
+  private val threadBean = ManagementFactory.getThreadMXBean
+
+  /** CPU ns of every live Java thread, by thread id. The JIT compiler
+    * and the GC workers are not Java threads, so their background work
+    * is not charged to the entry that happens to be running. */
+  private def threadCpu(): Map[Long, Long] =
+    threadBean.getAllThreadIds.iterator.map(id => id -> threadBean.getThreadCpuTime(id))
+      .filter(_._2 >= 0).toMap
+
+  /** Java-thread CPU ms spent since `before`; threads started since
+    * count from zero. */
+  private def cpuMsSince(before: Map[Long, Long]): Double =
+    threadCpu().iterator.map { case (id, t) => t - before.getOrElse(id, 0L) }.sum / 1e6
 
   private final case class Job(id: Int, startMs: Long, durMs: Long, desc: String)
 

@@ -4554,12 +4554,14 @@ object SegmentedIndex {
     * `value_count` aggs over the live hit set's stored field, in one
     * row. The distinct count here is EXACT (which keeps it on the
     * hash-oracle surface); ES itself serves HLL++ for this agg — at
-    * 100 TB swap `countDistinct` for `approx_count_distinct`, the
-    * same sketch tier q43/q119 already serve, and the plan shape
-    * (one partial+final aggregation over the column-pruned
-    * doc-values read) is unchanged. Missing-field docs drop from
-    * both numbers (ES's rule). Output: (cardinality, value_count),
-    * one row. */
+    * 100 TB swap `countDistinct` for
+    * `hll_sketch_estimate(hll_sketch_agg(value, 14))`, the DataSketches
+    * HLL q43/q119 already serve (one binary buffer, where Spark's
+    * `approx_count_distinct` carries a long column per 10 registers),
+    * and the plan shape (one partial+final aggregation over the
+    * column-pruned doc-values read) is unchanged. Missing-field docs
+    * drop from both numbers (ES's rule). Output: (cardinality,
+    * value_count), one row. */
   def cardinalityFacet(spark: SparkSession, rootDir: String,
                        terms: Seq[String], field: String): DataFrame =
     hitFieldValues(spark, rootDir, terms, field)

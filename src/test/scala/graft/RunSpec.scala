@@ -1,11 +1,12 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.engine.Tuning
 
@@ -19,27 +20,6 @@ class RunSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(s.sparkContext.master == "local[4]")
     assert(s.sparkContext.getConf.get("spark.cleaner.periodicGC.interval") == "1min")
-  }
-
-  /** (action name, executed plan) of the queries `action` runs, as a
-    * [[QueryExecutionListener]] sees them. Listener events arrive
-    * asynchronously, so wait (bounded) until `done` holds for them. */
-  private def executedPlans(action: => Unit)(
-      done: Seq[(String, SparkPlan)] => Boolean): Seq[(String, SparkPlan)] = {
-    val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(f -> qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      action
-      val deadline = System.nanoTime() + 30000000000L
-      def seen = plans.toArray(Array.empty[(String, SparkPlan)]).toSeq
-      while (!done(seen) && System.nanoTime() < deadline) Thread.sleep(20)
-      seen
-    } finally spark.listenerManager.unregister(listener)
   }
 
   private val aqe = new AdaptiveSparkPlanHelper {}
@@ -56,6 +36,34 @@ class RunSpec extends SparkSpec {
       _.exists(_._1 == "count")).filter(_._1 == "count")
     assert(counted.nonEmpty && !counted.exists(p => sorts(p._2)),
       counted.mkString("\n"))
+    spark.catalog.clearCache()
+  }
+
+  test("Run.labelled names every job it starts, AQE's query-stage jobs included") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val label = "q43_approx_distinct rep 1"
+    // Descriptions of the jobs started; ends are counted so the wait
+    // below covers every job the action ran.
+    val started = new ConcurrentLinkedQueue[String]()
+    val ended = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.add(
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Run.labelled(spark, label)(
+        Run.materialize(SparkEntry.queries("q43_approx_distinct")(spark, sf001)))
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+      val deadline = System.nanoTime() + 10000000000L
+      while (ended.get < started.size && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // AQE runs each query stage of q43's shuffles as a job of its own,
+    // submitted from another thread, before the write's result job.
+    val descs = started.toArray(Array.empty[String]).toSeq
+    assert(descs.size >= 2 && descs.forall(_ == label), descs.mkString("\n"))
     spark.catalog.clearCache()
   }
 

@@ -1,7 +1,10 @@
 package graft.queries
 
-import graft.SparkSpec
-import graft.SparkEntry
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+
+import graft.{Run, SparkEntry, SparkSpec}
 
 /** Physical-plan regression tests: the properties that make these plans
   * survive a 100 TB scale-up are asserted, not assumed. A refactor that
@@ -103,6 +106,29 @@ class PlanSpec extends SparkSpec {
     // ...feeding partial+final aggregation — not a join of per-distinct
     // subplans
     assert(!p.contains("Join"), p.take(1500))
+  }
+
+  test("q43: the cardinality sketch is one narrow buffer, not HLL++ registers") {
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def aggs(p: SparkPlan) =
+      aqe.collect(p) { case a: BaseAggregateExec => a }
+    // The AQE-final plan of the noop write, query stages included.
+    val plans = executedPlans(Run.materialize(
+      SparkEntry.queries("q43_approx_distinct")(spark, sf001)))(
+      _.exists(p => aggs(p._2).nonEmpty)).map(_._2)
+    val found = plans.flatMap(aggs)
+    assert(found.nonEmpty, plans.mkString("\n"))
+    // Spark's HLL++ at rsd 0.01 keeps 1639 long buffer columns per
+    // sketch, and every row the distinct-aggregate Expand emits
+    // carries them.
+    found.foreach { a =>
+      val width = a.aggregateExpressions.map(_.aggregateFunction.aggBufferAttributes.size).sum
+      assert(width <= 16, s"$width aggregate-buffer columns in ${a.nodeName}: " +
+        a.aggregateExpressions.map(_.aggregateFunction.prettyName).distinct.mkString(", "))
+    }
+    assert(found.exists(_.aggregateExpressions.exists(
+      _.aggregateFunction.prettyName == "hll_sketch_agg")), plans.mkString("\n"))
+    spark.catalog.clearCache()
   }
 
   test("q26: tf-idf search keeps the corpus-size frame broadcast") {
