@@ -461,16 +461,19 @@ object Bucketing {
       // delete-then-move — so a reader in another JVM mid-scan sees
       // either the old complete dir or the new one, never a
       // half-deleted tree (the compactZordered swap shape); only a
-      // torn, markerless dir is cleared in place.
+      // torn, markerless dir is cleared in place. Without `force` a
+      // complete dir another staging published meanwhile stays put:
+      // the publish below collides and adopts it.
       var stale: Option[java.io.File] = None
       if (dir.exists()) {
-        if (new java.io.File(dir, "_SUCCESS").isFile) {
+        if (!new java.io.File(dir, "_SUCCESS").isFile) deleteRecursively(dir)
+        else if (force) {
           val aside = new java.io.File(dir.getParentFile,
             dir.getName + ".old-" +
               java.util.UUID.randomUUID().toString.take(8))
           Fs.renameNoReplace(dir, aside)
           stale = Some(aside)
-        } else deleteRecursively(dir)
+        }
       }
       // the publish itself goes through the portable commit seam
       // ([[Fs]]): HDFS-atomic, conditional-put on object stores

@@ -113,7 +113,4 @@ object Pq {
     * [[read]] per path. */
   def readMany(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(schemaOf(spark, paths.head)).parquet(paths: _*)
-
-  /** Test seam + session hygiene: forget every cached schema. */
-  def invalidateAll(): Unit = schemas.clear()
 }

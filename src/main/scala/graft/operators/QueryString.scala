@@ -565,11 +565,7 @@ object QueryString {
           .prunedPostings(spark, root, segs, terms, nb)
         val dfreq = p.groupBy("term")
           .agg(count(lit(1)).as("doc_freq"))
-        val live = SegmentedIndex.tombstones(spark, root, segs) match {
-          case Some(dead) =>
-            p.join(dead, Seq("doc_id", "seg"), "left_anti")
-          case None => p
-        }
+        val live = SegmentedIndex.liveDocs(spark, root, segs)(p)
         fn -> FieldCtx(live, dfreq,
           segs.filter(_.kind == "seg").map(_.nDocs).sum)
     }
@@ -624,12 +620,7 @@ object QueryString {
     lazy val defaultLiveStored: DataFrame = {
       val root = new java.io.File(rootOf(defaultField))
       val (_, segs, _) = SegmentedIndex.readManifest(root)
-      val stored = SegmentedIndex.storedFrame(spark, root, segs)
-      SegmentedIndex.tombstones(spark, root, segs) match {
-        case Some(dead) =>
-          stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-        case None => stored
-      }
+      SegmentedIndex.liveStored(spark, root, segs)
     }
     val filterFrames = filterIds.toSeq.map {
       case ((kind, f, lo, hi), fid) =>
@@ -685,11 +676,8 @@ object QueryString {
           else {
             val ps = SegmentedIndex
               .prunedPostings(spark, root, segs, expansions, nb)
-            (SegmentedIndex.tombstones(spark, root, segs) match {
-              case Some(dead) =>
-                ps.join(dead, Seq("doc_id", "seg"), "left_anti")
-              case None => ps
-            }).select("doc_id").distinct()
+            SegmentedIndex.liveDocs(spark, root, segs)(ps)
+              .select("doc_id").distinct()
           }
         docs.withColumn(s"mc_$cid", lit(true))
     }
@@ -731,11 +719,8 @@ object QueryString {
         val (_, segs, _) = SegmentedIndex.readManifest(root)
         val stored = SegmentedIndex.storedFrame(spark, root, segs)
           .select("doc_id", "seg")
-        (SegmentedIndex.tombstones(spark, root, segs) match {
-          case Some(dead) =>
-            stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-          case None => stored
-        }).select("doc_id").distinct()
+        SegmentedIndex.liveDocs(spark, root, segs)(stored)
+          .select("doc_id").distinct()
       } else if (leafFrames.isEmpty)
         return Seq.empty[(Long, Double, Long)]
           .toDF("doc_id", "score", "n_terms_hit")

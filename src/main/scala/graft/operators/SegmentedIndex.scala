@@ -268,8 +268,11 @@ object SegmentedIndex {
     * another manifest-writing operation (streaming append vs a
     * maintenance merge/vacuum job) FAILS LOUDLY with
     * FileAlreadyExistsException instead of silently dropping the
-    * winner's committed segment from the manifest: the loser re-reads
-    * the new generation and redoes its read-modify-write. Superseded
+    * winner's committed segment from the manifest. Nothing here
+    * retries: [[commitBatch]] adopts a lost race only when the
+    * winner's manifest already holds the loser's own batch, and any
+    * other loser's operation must be re-run, re-reading the new
+    * generation. The loser's temp file is removed. Superseded
     * generation files beyond [[KeepGenerations]] are pruned here
     * (tiny, but otherwise one file per commit forever). */
   private def writeManifest(root: java.io.File, nBuckets: Int,
@@ -287,11 +290,30 @@ object SegmentedIndex {
       cfName.map(c => s"cf=$c").toSeq ++ segs.map(s =>
       s"${s.kind},${s.name},${s.nDocs},${s.totalLen}")).mkString("\n")
     java.nio.file.Files.writeString(tmp.toPath, body)
-    graft.engine.Fs.renameNoReplace(tmp,
+    try graft.engine.Fs.renameNoReplace(tmp,
       new java.io.File(root, f"_SEGMENTS.g${prevGen + 1}%013d"))
+    catch { case e: Throwable => tmp.delete(); throw e }
     manifestGens(root).dropRight(KeepGenerations)
       .foreach(_._2.delete())
   }
+
+  /** Commit one ingest batch's manifest lines — [[append]], [[delete]]
+    * and [[upsert]] all publish through here. `batch` is the batch's
+    * own manifest name (its `seg=`/`del=` fingerprint). A writer that
+    * loses the generation rename to a writer of the SAME batch (two
+    * stagers of one fixture: both staged the same immutable artifact)
+    * finds `batch` in the winner's manifest and adopts that commit;
+    * losing to any other commit rethrows unchanged, the loud
+    * lost-update failure of [[writeManifest]]. */
+  private def commitBatch(root: java.io.File, batch: String, nb: Int,
+                          segs: Seq[Seg], prevGen: Long,
+                          an: Option[String] = None,
+                          cf: Option[String] = None): Unit =
+    try writeManifest(root, nb, segs, prevGen, an, cf)
+    catch {
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        if (!readManifest(root)._2.exists(_.name == batch)) throw e
+    }
 
   /** TEST SEAM for the lost-update contract: replay a writer whose
     * read-modify-write was overtaken — it re-commits the CURRENT
@@ -394,7 +416,7 @@ object SegmentedIndex {
             writeCField(d, tmp, nb, an, (t._1, t._2), t._3)))
     }
     d.unpersist()
-    writeManifest(root, nb,
+    commitBatch(root, name, nb,
       segs :+ Seg("seg", name, stats.getLong(0), stats.getLong(1)), gen,
       Some(anName), cf.map(t => cfSpec((t._1, t._2), t._3)))
   }
@@ -733,11 +755,7 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val stored = storedFrame(spark, root, segs)
       .filter(col("doc_id").isin(ids: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     live.select("doc_id", "text").orderBy("doc_id")
   }
 
@@ -759,11 +777,7 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val stored = storedFrame(spark, root, segs)
       .filter(col("doc_id").isin(ids: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     live.select((col("doc_id") +: fields.map(col)): _*)
       .orderBy("doc_id")
   }
@@ -815,11 +829,7 @@ object SegmentedIndex {
       return Seq.empty[(Long, String, String)]
         .toDF("doc_id", "lang", "source")
     val stored = storedFrame(spark, root, mine)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     after.fold(live)(a => live.filter(col("doc_id") > lit(a)))
       .select("doc_id", "lang", "source")
       .orderBy("doc_id").limit(pageSize)
@@ -857,11 +867,7 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val p = segmentsRead(spark, root, segs)
       .filter(col("doc_id").isin(docIds: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     live.select("doc_id", "term", "tf", "positions")
       .orderBy("doc_id", "term")
   }
@@ -961,11 +967,7 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, qs, nb)
       .filter(col("term").isin(qs: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     live.agg(countDistinct(col("doc_id")).as("n_hits"))
   }
 
@@ -988,12 +990,7 @@ object SegmentedIndex {
     // plain highlighter re-analyzes instead — a documented
     // simplification)
     val hlTerms = qTerms(root, terms)
-    val stored = storedFrame(spark, root, segs)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveStored(spark, root, segs)
     Search.highlight(
       live.join(broadcast(top), Seq("doc_id"), "left_semi")
         .select("doc_id", "text"),
@@ -1025,12 +1022,7 @@ object SegmentedIndex {
         .toDF("doc_id", "pos", "n_hits", "snippet")
     val (_, segs, _) = readManifest(root)
     val top = search(spark, rootDir, terms, k).select("doc_id")
-    val stored = storedFrame(spark, root, segs)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveStored(spark, root, segs)
     // terms embed quote-escaped ([[Search.sqlLit]]) — under the
     // whitespace chain they pass through analysis unfiltered, so a
     // quote-bearing term must not break (or inject into) the expr.
@@ -1688,19 +1680,11 @@ object SegmentedIndex {
       val (nb, segs, _) = readManifest(root)
       val nDocs = segs.filter(_.kind == "seg").map(_.nDocs).sum
       val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
-      val dead = tombstones(spark, root, segs)
-      val hits = (dead match {
-        case Some(d) =>
-          p.join(d, Seq("doc_id", "seg"), "left_anti")
-        case None => p
-      }).select("doc_id").distinct().withColumn("idx", lit(name))
-      val allLive = (dead match {
-        case Some(d) => segmentsRead(spark, root, segs)
-          .select("term", "doc_id", "seg")
-          .join(d, Seq("doc_id", "seg"), "left_anti")
-        case None => segmentsRead(spark, root, segs)
-          .select("term", "doc_id", "seg")
-      }).withColumn("idx", lit(name))
+      val keepLive = liveDocs(spark, root, segs)
+      val hits = keepLive(p).select("doc_id").distinct()
+        .withColumn("idx", lit(name))
+      val allLive = keepLive(segmentsRead(spark, root, segs)
+        .select("term", "doc_id", "seg")).withColumn("idx", lit(name))
       (nDocs, hits, allLive, dictFrame(spark, root, segs))
     }
     val nTotal = perIndex.map(_._1).sum
@@ -1751,25 +1735,12 @@ object SegmentedIndex {
     val root = new java.io.File(rootDir)
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
-    val dead = tombstones(spark, root, segs)
-    val hits = (dead match {
-      case Some(d) => p.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }).select("doc_id").distinct()
-    val allLive = (dead match {
-      case Some(d) => segmentsRead(spark, root, segs)
-        .select("term", "doc_id", "seg")
-        .join(d, Seq("doc_id", "seg"), "left_anti")
-      case None => segmentsRead(spark, root, segs)
-        .select("term", "doc_id", "seg")
-    }).select("term", "doc_id")
-    val bgDocs = (dead match {
-      case Some(d) => storedFrame(spark, root, segs)
-        .filter(col(bgField) === lit(bgValue))
-        .join(d, Seq("doc_id", "seg"), "left_anti")
-      case None => storedFrame(spark, root, segs)
-        .filter(col(bgField) === lit(bgValue))
-    }).select("doc_id").distinct()
+    val keepLive = liveDocs(spark, root, segs)
+    val hits = keepLive(p).select("doc_id").distinct()
+    val allLive = keepLive(segmentsRead(spark, root, segs)
+      .select("term", "doc_id", "seg")).select("term", "doc_id")
+    val bgDocs = keepLive(storedFrame(spark, root, segs)
+      .filter(col(bgField) === lit(bgValue))).select("doc_id").distinct()
     // ONE corpus postings pass (r18 optimization): the old shape
     // semi-joined `allLive` — the full live postings read, THE cost
     // here — once per side; now hit/bg membership flags meet in one
@@ -1828,24 +1799,15 @@ object SegmentedIndex {
     val root = new java.io.File(rootDir)
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
-    val dead = tombstones(spark, root, segs)
-    val hits = (dead match {
-      case Some(d) =>
-        p.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }).select("doc_id").distinct()
+    val keepLive = liveDocs(spark, root, segs)
+    val hits = keepLive(p).select("doc_id").distinct()
     val withVals = storedFrame(spark, root, segs)
       .select(col("doc_id") +:
         fields.map { case (f, as) => col(f).as(as) } :+ col("seg"): _*)
     val stored = requireNonNull.foldLeft(withVals) { (df, c) =>
       df.filter(col(c).isNotNull)
     }
-    val liveStored = dead match {
-      case Some(d) =>
-        stored.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
-    liveStored.join(hits, Seq("doc_id"), "left_semi")
+    keepLive(stored).join(hits, Seq("doc_id"), "left_semi")
       .select(col("doc_id") +: fields.map(f => col(f._2)): _*)
   }
 
@@ -1869,10 +1831,8 @@ object SegmentedIndex {
     val stored = storedFrame(spark, root, segs)
       .select(col("doc_id") +:
         fields.map { case (f, as) => col(f).as(as) } :+ col("seg"): _*)
-    (tombstones(spark, root, segs) match {
-      case Some(d) => stored.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None    => stored
-    }).select(col("doc_id") +: fields.map(f => col(f._2)): _*)
+    liveDocs(spark, root, segs)(stored)
+      .select(col("doc_id") +: fields.map(f => col(f._2)): _*)
   }
 
   /** [[liveStoredFields]] for one field renamed `value` — the
@@ -2016,12 +1976,7 @@ object SegmentedIndex {
         "cannot hold at this corpus scale")
     val weights = selected.map { case (t, df) =>
       (t, nDocs * dProd / df) }.toDF("term", "w")
-    val p = prunedPostings(spark, root, segs, selected.map(_._1), nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = livePostings(spark, root, segs, selected.map(_._1), nb)
     live.filter(col("doc_id") =!= lit(docId))
       .join(broadcast(weights), "term")
       .groupBy("doc_id")
@@ -2434,11 +2389,7 @@ object SegmentedIndex {
       // the context filter applies on the pruned candidate slice —
       // candidate-sized, never corpus-sized
       .transform(c => context.fold(c)(v => c.filter(col("ctx") === lit(v))))
-    val liveCand = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        cand.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => cand
-    }
+    val liveCand = liveDocs(spark, root, segs)(cand)
     liveCand
       .groupBy("input").agg(max("weight").as("weight"))
       .orderBy(desc("weight"), asc("input"))
@@ -2489,11 +2440,7 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, Seq(ta, tb), nb)
       .filter(col("term").isin(ta, tb))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val pa = live.filter(col("term") === lit(ta))
       .select(col("doc_id"), col("positions").as("pa"))
     val pb = live.filter(col("term") === lit(tb))
@@ -2591,11 +2538,7 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, allTerms, nb)
       .filter(col("term").isin(allTerms: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val membership = analyzed
       .flatMap { case (n, ts) => ts.map(t => (n, t)) }
       .toDF("name", "term")
@@ -2729,7 +2672,7 @@ object SegmentedIndex {
       (p.select(col("term"), col("doc_id"),
         (col("tf").cast("double") * lit(w)).as("wtf"),
         col("seg")),
-        tombstones(spark, root, segs),
+        liveDocs(spark, root, segs),
         segs.filter(_.kind == "seg").map(_.nDocs).sum)
     }
     val nDocs = parts.head._3
@@ -2741,12 +2684,8 @@ object SegmentedIndex {
     val all = parts.map(_._1).reduce(_ unionByName _)
     val dfreq = all.select("term", "doc_id").distinct()
       .groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = parts.map { case (p, dead, _) =>
-      dead match {
-        case Some(dd) => p.join(dd, Seq("doc_id", "seg"), "left_anti")
-        case None     => p
-      }
-    }.reduce(_ unionByName _)
+    val live = parts.map { case (p, keepLive, _) => keepLive(p) }
+      .reduce(_ unionByName _)
     val combined = live.groupBy("term", "doc_id")
       .agg(sum("wtf").as("ctf"))
       .join(dfreq, "term")
@@ -2801,17 +2740,12 @@ object SegmentedIndex {
         "(none | max | min | sum | avg)")
     val root = new java.io.File(rootDir)
     val (_, segs, _) = readManifest(root)
-    val dead = tombstones(spark, root, segs)
-    val stored = storedFrame(spark, root, segs)
+    val live = liveDocs(spark, root, segs)(storedFrame(spark, root, segs)
       .select(col("doc_id"), col(typeField).as("jt"),
-        col(parentField).as("pid"), col("seg"))
-    val liveStored = dead match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
+        col(parentField).as("pid"), col("seg")))
     val hits = scoredHits(spark, rootDir, childTerms)
       .select("doc_id", "score")
-    val children = liveStored
+    val children = live
       .filter(col("jt") === lit(childType) && col("pid").isNotNull)
       .join(hits, Seq("doc_id"))
     val byParent = children
@@ -2832,7 +2766,7 @@ object SegmentedIndex {
       case "avg" => csum / col("n_children_matched").cast("double")
       case _     => lit(0.0d)
     }
-    val parents = liveStored
+    val parents = live
       .filter(col("jt") === lit(parentType)).select("doc_id")
     parents.join(byParent, Seq("doc_id"))
       .withColumn("score", scoreCol)
@@ -2857,20 +2791,15 @@ object SegmentedIndex {
                       parentField: String = "parent_id"): DataFrame = {
     val root = new java.io.File(rootDir)
     val (_, segs, _) = readManifest(root)
-    val dead = tombstones(spark, root, segs)
-    val stored = storedFrame(spark, root, segs)
+    val live = liveDocs(spark, root, segs)(storedFrame(spark, root, segs)
       .select(col("doc_id"), col(typeField).as("jt"),
-        col(parentField).as("pid"), col("seg"))
-    val liveStored = dead match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
+        col(parentField).as("pid"), col("seg")))
     val parentHits = scoredHits(spark, rootDir, parentTerms)
       .select(col("doc_id"), col("score"))
-      .join(liveStored.filter(col("jt") === lit(parentType))
+      .join(live.filter(col("jt") === lit(parentType))
         .select("doc_id"), Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("pid"), col("score"))
-    liveStored
+    live
       .filter(col("jt") === lit(childType) && col("pid").isNotNull)
       .join(parentHits, Seq("pid"))
       .withColumn("score",
@@ -3016,10 +2945,7 @@ object SegmentedIndex {
     val stored = storedFrame(spark, root, segs)
       .select(col("doc_id"), col(parentIdField).as("pid"),
         col(bucketField).as("value"), col("seg"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     live
       .join(parents.withColumnRenamed("doc_id", "pid"),
         Seq("pid"), "left_semi")
@@ -3045,10 +2971,7 @@ object SegmentedIndex {
       col("seg")) ++ storedEq.map(e => col(e._1)).toSeq ++
       extraCols.map(col)
     val stored = storedFrame(spark, root, segs).select(cols: _*)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     val gated = storedEq match {
       case Some((f, v)) => live.filter(col(f) === lit(v))
       case None         => live
@@ -3066,10 +2989,7 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val stored = storedFrame(spark, root, segs)
       .select("doc_id", "seg")
-    (tombstones(spark, root, segs) match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }).select("doc_id").distinct()
+    liveDocs(spark, root, segs)(stored).select("doc_id").distinct()
   }
 
   /** `t_test` — ES's two-sample statistical agg (heteroscedastic /
@@ -3410,19 +3330,14 @@ object SegmentedIndex {
     import spark.implicits._
     val root = new java.io.File(rootDir)
     val (_, segs, _) = readManifest(root)
-    val dead = tombstones(spark, root, segs)
-    val stored = storedFrame(spark, root, segs)
-    val liveStored = dead match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
-    val lookup = liveStored
+    val live = liveStored(spark, root, segs)
+    val lookup = live
       .filter(col("doc_id") === lit(lookupId))
       .select(col(lookupField)).limit(1).collect()
     if (lookup.isEmpty || lookup.head.isNullAt(0))
       return Seq.empty[(Long, String)].toDF("doc_id", "value")
     val v = lookup.head.get(0)
-    liveStored
+    live
       .filter(col(targetField) === lit(v))
       .select(col("doc_id"), col(targetField).cast("string")
         .as("value"))
@@ -3699,11 +3614,7 @@ object SegmentedIndex {
       // BOUNDED collect: one row per (field, term)
       val dfs = p.groupBy("term").agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val live = tombstones(spark, root, segs) match {
-        case Some(dead) =>
-          p.join(dead, Seq("doc_id", "seg"), "left_anti")
-        case None => p
-      }
+      val live = liveDocs(spark, root, segs)(p)
       Fam(live, dfs, segs.filter(_.kind == "seg").map(_.nDocs).sum)
     }
     require(fams.map(_.nDocs).distinct.size == 1,
@@ -3917,11 +3828,7 @@ object SegmentedIndex {
     val matched = pairs.map(_._2).distinct
     val p = prunedPostings(spark, root, segs, matched, nb)
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val contribs = pairs.zipWithIndex.map { case ((_, t), i) =>
       sum(when(col("term") === lit(t),
         col("tf").cast("double") *
@@ -3961,11 +3868,7 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, qs, nb)
       .filter(col("term") === lit(qs.head))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     live
       .withColumn("first_pos", array_min(col("positions")))
       .filter(col("first_pos") < lit(end))
@@ -4005,11 +3908,7 @@ object SegmentedIndex {
       "span_near needs a surviving term on each side")
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, (fq ++ sq).distinct, nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     def side(ts: Seq[String], as: String) =
       live.filter(col("term").isin(ts: _*))
         .select(col("doc_id"),
@@ -4053,11 +3952,7 @@ object SegmentedIndex {
       "span_not needs surviving include and exclude terms")
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, (iq ++ eq).distinct, nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     def side(ts: Seq[String], as: String) =
       live.filter(col("term").isin(ts: _*))
         .select(col("doc_id"), explode(col("positions")).as(as))
@@ -4258,12 +4153,7 @@ object SegmentedIndex {
       return Seq.empty[(Long, Long, Long)]
         .toDF("doc_id", "n_intervals", "min_span")
     val leaves = leafIdx.keys.toSeq
-    val p = prunedPostings(spark, root, segs, leaves, nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = livePostings(spark, root, segs, leaves, nb)
     // one shuffle: each candidate doc's per-leaf position arrays
     // (a live doc has one postings row per term — the flatten is a
     // no-op on healthy manifests, sort_array re-pins order anyway)
@@ -4345,11 +4235,7 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, allTerms, nb)
       .filter(col("term").isin(allTerms: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val membership = analyzed
       .flatMap { case (n, ts) => ts.map(t => (n, t)) }
       .toDF("name", "term")
@@ -4407,11 +4293,7 @@ object SegmentedIndex {
       return Seq.empty[(String, Long)].toDF("key", "doc_count")
     val p = prunedPostings(spark, root, segs, allTerms, nb)
       .filter(col("term").isin(allTerms: _*))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val membership = analyzed
       .flatMap { case (n, ts) => ts.map(t => (n, t)) }
       .toDF("name", "term")
@@ -4486,11 +4368,7 @@ object SegmentedIndex {
         Seq.empty[(Long, Boolean)].toDF("doc_id", "has"))
         .withColumn("seg", lit(sg.name.stripPrefix("seg=")))
     }.reduce(_ unionByName _)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveDocs(spark, root, segs)(stored)
     live.select(col("doc_id"), lit(1.0d).as("score"))
       .orderBy("doc_id").limit(k)
   }
@@ -4724,11 +4602,8 @@ object SegmentedIndex {
     val scored = scoredHits(spark, rootDir, positive)
     val nq = qTerms(root, negative)
     val (nb, segs, _) = readManifest(root)
-    val np = prunedPostings(spark, root, segs, nq, nb)
-    val negDocs = (tombstones(spark, root, segs) match {
-      case Some(dead) => np.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None       => np
-    }).select("doc_id").distinct().withColumn("neg", lit(true))
+    val negDocs = livePostings(spark, root, segs, nq, nb)
+      .select("doc_id").distinct().withColumn("neg", lit(true))
     scored.join(negDocs, Seq("doc_id"), "left")
       .withColumn("demoted", coalesce(col("neg"), lit(false)))
       .withColumn("score",
@@ -4789,11 +4664,8 @@ object SegmentedIndex {
     val (_, segs, _) = readManifest(root)
     val stored = storedFrame(spark, root, segs)
       .filter(col("doc_id").isin(ids: _*))
-    val livePinned = (tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }).select("doc_id").distinct()
+    val livePinned = liveDocs(spark, root, segs)(stored)
+      .select("doc_id").distinct()
     val ord = ids.zipWithIndex.toDF("doc_id", "pin_ord")
     val scored = scoredHits(spark, rootDir, terms)
     val pins = livePinned.join(broadcast(ord), Seq("doc_id"))
@@ -5096,12 +4968,7 @@ object SegmentedIndex {
               analyzer: Option[String] = None): Unit = {
     val root = new java.io.File(srcDir)
     val (_, segs, _) = readManifest(root)
-    val stored = storedFrame(spark, root, segs)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => stored
-    }
+    val live = liveStored(spark, root, segs)
     // the destination's chain: the migration parameter, else the
     // source's — committed first so a pre-existing destination's own
     // chain wins inside append (the ES mapping contract). The
@@ -5264,11 +5131,7 @@ object SegmentedIndex {
         val (_, segs, _) = readManifest(rootF)
         val stored = storedFrame(spark, rootF, segs)
           .select(col("doc_id"), col(f).as("fv"), col("seg"))
-        val live = tombstones(spark, rootF, segs) match {
-          case Some(dd) =>
-            stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-          case None => stored
-        }
+        val live = liveDocs(spark, rootF, segs)(stored)
         scoredHits(spark, root, terms)
           .join(live.filter(col("fv") === lit(v)).select("doc_id"),
             Seq("doc_id"), "left_semi")
@@ -5320,7 +5183,7 @@ object SegmentedIndex {
         .write.mode("overwrite").parquet(tmp.getPath)
     }
     ids.unpersist()
-    writeManifest(root, nb, segs :+ Seg("del", name, n, 0L), gen)
+    commitBatch(root, name, nb, segs :+ Seg("del", name, n, 0L), gen)
   }
 
   /** Delete-by-query — ES's `_delete_by_query`: tombstone every LIVE
@@ -5337,12 +5200,8 @@ object SegmentedIndex {
     require(terms.nonEmpty, "deleteByQuery needs at least one term")
     val root = new java.io.File(rootDir)
     val (nb, segs, _) = readManifest(root)
-    val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
-    val hits = (tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }).select("doc_id").distinct()
+    val hits = livePostings(spark, root, segs, qTerms(root, terms), nb)
+      .select("doc_id").distinct()
     delete(spark, rootDir, hits, batchKey)
   }
 
@@ -5396,7 +5255,7 @@ object SegmentedIndex {
                 writeCField(d, tmp, nb, an, (t._1, t._2), t._3)))
         })
     d.unpersist()
-    writeManifest(root, nb,
+    commitBatch(root, segName, nb,
       segs :+ Seg("del", delName, stats.getLong(0), 0L)
         :+ Seg("seg", segName, stats.getLong(0), stats.getLong(1)), gen)
   }
@@ -5455,16 +5314,9 @@ object SegmentedIndex {
       "updateByQuery's query analyzed to nothing — refusing a no-op")
     val (nb, segs, _) = readManifest(root)
     val p = prunedPostings(spark, root, segs, qs, nb)
-    val dead = tombstones(spark, root, segs)
-    val hits = (dead match {
-      case Some(dd) => p.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => p
-    }).select("doc_id").distinct()
-    val stored = storedFrame(spark, root, segs)
-    val liveStored = dead match {
-      case Some(dd) => stored.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None     => stored
-    }
+    val keepLive = liveDocs(spark, root, segs)
+    val hits = keepLive(p).select("doc_id").distinct()
+    val liveRows = keepLive(storedFrame(spark, root, segs))
     // the selective/scan gate (scaladoc above): the probe collect is
     // bounded by construction — limit(gate+1) caps what reaches the
     // driver regardless of the hit count, and its source is the
@@ -5474,9 +5326,9 @@ object SegmentedIndex {
       .getOrElse(UpdateByQueryIdPushdownMaxRowsDefault)
     val probe = hits.limit(gate + 1).collect().map(_.getLong(0))
     if (probe.length <= gate)
-      liveStored.filter(col("doc_id").isin(probe: _*)).drop("seg")
+      liveRows.filter(col("doc_id").isin(probe: _*)).drop("seg")
     else
-      liveStored.join(hits, Seq("doc_id"), "left_semi").drop("seg")
+      liveRows.join(hits, Seq("doc_id"), "left_semi").drop("seg")
   }
 
   /** The postings schema, stated EXPLICITLY on every multi-segment
@@ -5560,7 +5412,7 @@ object SegmentedIndex {
     * added later, which is what keeps [[upsert]]'s new versions
     * alive). Batch-bounded × O(segments) rows.
     *
-    * The broadcast hint for the downstream (doc_id, seg) anti joins
+    * The broadcast hint for [[liveDocs]]'s (doc_id, seg) anti join
     * is decided HERE, gated on the MANIFEST's tombstone accounting
     * (each del line's recorded row count × the postings segments it
     * applies to is exactly the expanded build-side cardinality — no
@@ -5570,7 +5422,7 @@ object SegmentedIndex {
     * be forced through the 8 GB broadcast ceiling — above the
     * threshold the hint is dropped and AQE plans the join from
     * runtime statistics. */
-  private[operators] def tombstones(spark: SparkSession, root: java.io.File,
+  private def tombstones(spark: SparkSession, root: java.io.File,
                          segs: Seq[Seg]): Option[DataFrame] = {
     val dels = segs.zipWithIndex.filter(_._1.kind == "del")
     val frames = dels
@@ -5592,6 +5444,34 @@ object SegmentedIndex {
     frames.reduceOption(_ unionByName _)
       .map(f => if (expandedRows <= maxRows) broadcast(f) else f)
   }
+
+  /** The live-docs rule — Lucene's live-docs bitmap, the ONE place it
+    * is written: the returned function drops a frame's rows whose
+    * (doc_id, seg) is tombstoned under `segs` (a left-anti join
+    * against [[tombstones]], broadcast-gated there); with no
+    * tombstones it is the identity. Reads [[tombstones]] once, so a
+    * caller filtering several frames (hits and stored rows, say)
+    * applies the one returned function to each. Statistics phases
+    * stay the caller's choice: df/N read the frame BEFORE the rule,
+    * hit lists after it. */
+  private[operators] def liveDocs(spark: SparkSession, root: java.io.File,
+      segs: Seq[Seg]): DataFrame => DataFrame = {
+    val dead = tombstones(spark, root, segs)
+    x => dead.fold(x)(d => x.join(d, Seq("doc_id", "seg"), "left_anti"))
+  }
+
+  /** The live stored rows of `segs` — [[storedFrame]] under
+    * [[liveDocs]]. */
+  private[operators] def liveStored(spark: SparkSession,
+      root: java.io.File, segs: Seq[Seg]): DataFrame =
+    liveDocs(spark, root, segs)(storedFrame(spark, root, segs))
+
+  /** The live postings of `terms` — [[prunedPostings]] under
+    * [[liveDocs]], for reads that take no df from the pre-tombstone
+    * postings. */
+  private def livePostings(spark: SparkSession, root: java.io.File,
+      segs: Seq[Seg], terms: Seq[String], nb: Int): DataFrame =
+    liveDocs(spark, root, segs)(prunedPostings(spark, root, segs, terms, nb))
 
   /** Term search over the segmented index with Lucene's statistics
     * semantics: N and df INCLUDE tombstoned documents (stats shift
@@ -5734,11 +5614,7 @@ object SegmentedIndex {
     val nDocs = segs.filter(_.kind == "seg").map(_.nDocs).sum
     val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     live.filter(col("doc_id") === lit(docId))
       .join(dfreq, "term")
       .withColumn("contrib", col("tf").cast("double") *
@@ -5806,11 +5682,7 @@ object SegmentedIndex {
     // df BEFORE tombstones — Lucene counts deleted docs' postings in
     // its term statistics until a merge rewrites them
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     scoreLive(live, dfreq, terms, nDocs)
   }
 
@@ -5903,12 +5775,8 @@ object SegmentedIndex {
     // df BEFORE tombstones (Lucene's stats phase), scoring terms only
     val dfreq = p.filter(col("term").isin(scoring: _*))
       .groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val dead = tombstones(spark, root, segs)
-    val live = dead match {
-      case Some(dd) =>
-        p.join(dd, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val keepLive = liveDocs(spark, root, segs)
+    val live = keepLive(p)
     // candidates: all-of-must, plus >= minimum_should_match distinct
     // should terms (default: 0 beside a must, 1 for should-only)
     val msm: Int =
@@ -5942,12 +5810,8 @@ object SegmentedIndex {
           .filter(col("rv").between(lo, hi))
         // live stored rows only: an upserted doc must be judged on
         // its NEW value, not the dead version's still-on-disk row
-        val liveVals = dead match {
-          case Some(dd) =>
-            vals.join(dd, Seq("doc_id", "seg"), "left_anti")
-          case None => vals
-        }
-        cand1.join(liveVals.select("doc_id"), Seq("doc_id"), "left_semi")
+        cand1.join(keepLive(vals).select("doc_id"), Seq("doc_id"),
+          "left_semi")
       case None => cand1
     }
     scoreLive(live.filter(col("term").isin(scoring: _*))
@@ -6057,14 +5921,7 @@ object SegmentedIndex {
         .toDF("doc_id", "score", "n_terms_hit")
     val (nb, segs, _) = readManifest(root)
     val allTerms = (scoring ++ mustNot2).distinct
-    lazy val live = {
-      val p = prunedPostings(spark, root, segs, allTerms, nb)
-      tombstones(spark, root, segs) match {
-        case Some(dead) =>
-          p.join(dead, Seq("doc_id", "seg"), "left_anti")
-        case None => p
-      }
-    }
+    lazy val live = livePostings(spark, root, segs, allTerms, nb)
     def withAll(ts: Seq[String]) =
       live.filter(col("term").isin(ts: _*))
         .groupBy("doc_id")
@@ -6090,11 +5947,7 @@ object SegmentedIndex {
         // postings-bounded)
         val stored = storedFrame(spark, root, segs)
           .select("doc_id", "seg")
-        (tombstones(spark, root, segs) match {
-          case Some(dead) =>
-            stored.join(dead, Seq("doc_id", "seg"), "left_anti")
-          case None => stored
-        }).select("doc_id").distinct()
+        liveDocs(spark, root, segs)(stored).select("doc_id").distinct()
       } else
         ((if (should2.nonEmpty) Seq(withAny(should2)) else Seq.empty) ++
           pq.shouldPhrases.map(phraseDocs))
@@ -6173,14 +6026,8 @@ object SegmentedIndex {
     val prefixDocs =
       if (expansions.isEmpty)
         Seq.empty[(Long, Boolean)].toDF("doc_id", "pfx")
-      else {
-        val p = prunedPostings(spark, root, segs, expansions, nb)
-        (tombstones(spark, root, segs) match {
-          case Some(dead) =>
-            p.join(dead, Seq("doc_id", "seg"), "left_anti")
-          case None => p
-        }).select("doc_id").distinct().withColumn("pfx", lit(true))
-      }
+      else livePostings(spark, root, segs, expansions, nb)
+        .select("doc_id").distinct().withColumn("pfx", lit(true))
     scored.join(prefixDocs, Seq("doc_id"), "full_outer")
       .withColumn("score",
         coalesce(col("score"), lit(0.0d)) +
@@ -6219,22 +6066,15 @@ object SegmentedIndex {
     val (nb, segs, _) = readManifest(root)
     val nDocs = segs.filter(_.kind == "seg").map(_.nDocs).sum
     val p = prunedPostings(spark, root, segs, qTerms(root, terms), nb)
-    val dead = tombstones(spark, root, segs)
-    val hits = (dead match {
-      case Some(d) => p.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None    => p
-    }).select("doc_id").distinct()
+    val keepLive = liveDocs(spark, root, segs)
+    val hits = keepLive(p).select("doc_id").distinct()
       .orderBy("doc_id").limit(sampleSize)
-    val stored = storedFrame(spark, root, segs)
-    val liveStored = dead match {
-      case Some(d) => stored.join(d, Seq("doc_id", "seg"), "left_anti")
-      case None    => stored
-    }
+    val liveRows = keepLive(storedFrame(spark, root, segs))
     // filter_duplicate_text: one representative (lowest id) per
     // exact text digest within the sample
     val wDup = org.apache.spark.sql.expressions.Window
       .partitionBy(col("digest")).orderBy(asc("doc_id"))
-    val sampled = liveStored
+    val sampled = liveRows
       .join(hits, Seq("doc_id"), "left_semi")
       .withColumn("digest", md5(col("text")))
       .withColumn("rk", row_number().over(wDup))
@@ -6331,11 +6171,7 @@ object SegmentedIndex {
       val (nb, segs, _) = readManifest(root)
       val nDocs = segs.filter(_.kind == "seg").map(_.nDocs).sum
       val p = prunedPostings(spark, root, segs, qs, nb)
-      val live = tombstones(spark, root, segs) match {
-        case Some(dead) =>
-          p.join(dead, Seq("doc_id", "seg"), "left_anti")
-        case None => p
-      }
+      val live = liveDocs(spark, root, segs)(p)
       (nDocs, p, live.withColumn("idx", lit(name)))
     }
     val nTotal = perIndex.map(_._1).sum
@@ -6428,11 +6264,7 @@ object SegmentedIndex {
         else {
           val p = prunedPostings(spark, root, segs, qs, nb)
             .filter(col("term").isin(qs: _*))
-          Some((tombstones(spark, root, segs) match {
-            case Some(dead) =>
-              p.join(dead, Seq("doc_id", "seg"), "left_anti")
-            case None => p
-          }).withColumn("idx", lit(name)))
+          Some(liveDocs(spark, root, segs)(p).withColumn("idx", lit(name)))
         }
       (nDocs, dict, live)
     }
@@ -6528,11 +6360,7 @@ object SegmentedIndex {
       val terms = chunk.flatMap(_._2).distinct.sorted
       val p = prunedPostings(spark, root, segs, terms, nb)
         .filter(col("term").isin(terms: _*))
-      val live = tombstones(spark, root, segs) match {
-        case Some(dead) =>
-          p.join(dead, Seq("doc_id", "seg"), "left_anti")
-        case None => p
-      }
+      val live = liveDocs(spark, root, segs)(p)
       val membership = chunk
         .flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
         .toDF("query_id", "term")
@@ -6643,11 +6471,7 @@ object SegmentedIndex {
     val topTerm = present.maxBy(t => (ub(t), t))
     val p = prunedPostings(spark, root, segs, present, nb)
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     // phase 1: the top-ceiling term's docs, fully scored → θ
     val cand1 = live.filter(col("term") === lit(topTerm))
       .select("doc_id").distinct()
@@ -6741,11 +6565,7 @@ object SegmentedIndex {
     val p = prunedPostings(spark, root, segs, qs, nb)
       .filter(col("term").isin(qs: _*))
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     bm25ScoreBody(live, dfreq, nDocs, totalLen, k1, b)
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -6853,11 +6673,7 @@ object SegmentedIndex {
     val p = prunedPostings(spark, root, segs, present, nb)
       .filter(col("term").isin(present: _*))
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val kth = bm25ScoreBody(
         live.join(live.filter(col("term") === lit(topTerm))
           .select("doc_id").distinct(), Seq("doc_id"), "left_semi"),
@@ -6944,11 +6760,7 @@ object SegmentedIndex {
     // exact integers per live doc for the certificate
     val p = prunedPostings(spark, root, segs, Seq(ta, tb), nb)
       .filter(col("term").isin(ta, tb))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val tfp = live.groupBy("doc_id", "dl").agg(
       sum(when(col("term") === lit(ta), col("tf")).otherwise(lit(0L)))
         .as("tf_a"),
@@ -7050,11 +6862,7 @@ object SegmentedIndex {
     val p = prunedPostings(spark, root, segs, Seq(qt), nb)
       .filter(col("term") === lit(qt))
     val dfreq = p.agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     // the denominator is computed in DOUBLE, not Long — correctly
     // rounded at any magnitude (bit-identical inside the 2^53
     // envelope) where the Long sum would silently wrap at 2^63 —
@@ -7253,11 +7061,7 @@ object SegmentedIndex {
         // is one dictionary read, vocabulary-sized like pass 1)
         segmentsRead(spark, root, segs)
           .join(matchedDf, Seq("term"), "left_semi")
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     live.groupBy("doc_id")
       .agg(countDistinct(col("term")).as("n_terms_matched"))
       .withColumn("score", lit(1.0d))
@@ -7318,11 +7122,7 @@ object SegmentedIndex {
     // prunes to their buckets at planning time, like any term query
     val p = prunedPostings(spark, root, segs, matched, nb)
     val dfreq = p.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = liveDocs(spark, root, segs)(p)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_term", "term")
       .orderBy(desc("tfidf"), asc("doc_id"))
@@ -7367,12 +7167,7 @@ object SegmentedIndex {
       return Seq.empty[(Long, Long, Long)]
         .toDF("doc_id", "n_occurrences", "first_pos")
     val terms = offsets.map(_._1).distinct
-    val p = prunedPostings(spark, root, segs, terms, nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = livePostings(spark, root, segs, terms, nb)
     Search.phraseFromPostings(live.select(col("doc_id"), col("term"),
       explode(col("positions")).as("pos")), offsets)
   }
@@ -7433,12 +7228,7 @@ object SegmentedIndex {
       return Seq.empty[(Long, Long, Long)]
         .toDF("doc_id", "n_occurrences", "first_pos")
     val all = (leadOffsets.map(_._1) ++ expanded).distinct
-    val p = prunedPostings(spark, root, segs, all, nb)
-    val live = tombstones(spark, root, segs) match {
-      case Some(dead) =>
-        p.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => p
-    }
+    val live = livePostings(spark, root, segs, all, nb)
     val k = leadOffsets.size + 1
     val offsets = (leadOffsets ++
       expanded.map(t => (t, prefixOff)))
@@ -7611,12 +7401,8 @@ object SegmentedIndex {
     val posts = prefix.filter(_.kind == "seg")
     val dels = prefix.filter(_.kind == "del")
     if (posts.size <= 1 && dels.isEmpty) return (0, 0)
-    val all = segmentsRead(spark, root, posts)
-    val live = tombstones(spark, root, prefix) match {
-      case Some(dead) =>
-        all.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => all
-    }
+    val keepLive = liveDocs(spark, root, prefix)
+    val live = keepLive(segmentsRead(spark, root, posts))
     val fp = graft.engine.Bucketing.fingerprint8(
       "sx4merge|" + prefix.map(_.name).mkString("|"))
     val name = s"seg=$fp"
@@ -7626,12 +7412,7 @@ object SegmentedIndex {
     // so (doc_id, dl) pairs recover exact doc counts and lengths
     val st = merged.select("doc_id", "dl").distinct()
       .agg(count(lit(1)).as("n"), sum("dl").as("tl")).collect().head
-    val storedAll = storedFrame(spark, root, prefix)
-    val storedLive = tombstones(spark, root, prefix) match {
-      case Some(dead) =>
-        storedAll.join(dead, Seq("doc_id", "seg"), "left_anti")
-      case None => storedAll
-    }
+    val storedLive = keepLive(storedFrame(spark, root, prefix))
     graft.engine.Bucketing.atomicStage(new java.io.File(root, name)) {
       tmp =>
         // postings first and alone (overwrite truncates tmp), then

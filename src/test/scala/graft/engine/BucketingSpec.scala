@@ -315,4 +315,28 @@ class BucketingSpec extends SparkSpec {
     assert(!liveStage.exists() && !foreign.exists())
     assert(published.exists())
   }
+
+  test("atomicStage adopts a complete dir another staging published " +
+    "while it built; only force replaces it") {
+    val parent = Files.createTempDirectory("graft-stage-race").toFile
+    def publishDuring(dir: java.io.File, force: Boolean): Unit =
+      Bucketing.atomicStage(dir, force) { tmp =>
+        tmp.mkdirs()
+        Files.writeString(new java.io.File(tmp, "who").toPath, "us")
+        // the rival's complete dir lands mid-build
+        dir.mkdirs()
+        Files.writeString(new java.io.File(dir, "who").toPath, "them")
+        new java.io.File(dir, "_SUCCESS").createNewFile()
+      }
+    def who(dir: java.io.File) =
+      Files.readString(new java.io.File(dir, "who").toPath)
+    val kept = new java.io.File(parent, "kept")
+    publishDuring(kept, force = false)
+    assert(who(kept) == "them")
+    val replaced = new java.io.File(parent, "replaced")
+    publishDuring(replaced, force = true)
+    assert(who(replaced) == "us")
+    assert(parent.list().sorted.toSeq == Seq("kept", "replaced"),
+      "no stage or aside dir may be left behind")
+  }
 }

@@ -328,6 +328,40 @@ class SegmentedIndexSpec extends SparkSpec {
       "the loser's failed commit must leave the winner's intact")
   }
 
+  test("same-batch appenders racing on one fresh root all return: " +
+    "losers adopt the winner's commit, the segment is listed once, " +
+    "and search equals a single writer's index") {
+    val solo = Files.createTempDirectory("graft-race-solo").toString
+    SegmentedIndex.append(spark, solo, corpus, "same", nBuckets = 4)
+    def hits(root: String) = SegmentedIndex
+      .search(spark, root, Seq("x", "y", "z", "w"), 10)
+      .as[(Long, Double, Long)].collect().toSeq
+    val want = hits(solo)
+    val writers = 4
+    (1 to 4).foreach { round =>
+      val root = Files.createTempDirectory(s"graft-race-$round").toString
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+      try {
+        val calls = (1 to writers).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = {
+              go.await()
+              SegmentedIndex.append(spark, root, corpus, "same",
+                nBuckets = 4)
+            }
+          })
+        }
+        go.countDown()
+        // get() rethrows a writer's failure
+        calls.foreach(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      } finally pool.shutdownNow()
+      assert(SegmentedIndex.stats(root) == ((1L, 0L, 4L)),
+        s"round $round: the batch must be listed exactly once")
+      assert(hits(root) == want, s"round $round")
+    }
+  }
+
   test("fetch pushes the id filter into the doc_id-sorted stored " +
     "files: the stored scan outputs only the requested rows, never " +
     "the segment") {
