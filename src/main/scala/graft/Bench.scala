@@ -77,11 +77,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Run.defaultCpus
     val spark = Run.session(cpus)
-    // Warm the session (JIT, codegen compilation, file-index, shuffle
-    // machinery) by running the whole suite once against the tiny
-    // sf0.001 fixtures, so timed numbers measure steady-state query
-    // throughput at the target SF rather than first-run JVM costs.
-    // Disable with SPARK_GRAFT_WARM=0.
+    // Warm the session (JIT, file-index, shuffle machinery) by running
+    // the whole suite once against the tiny sf0.001 fixtures, so timed
+    // numbers measure steady-state query throughput at the target SF
+    // rather than first-run JVM costs. It does not warm code
+    // generation: the 360 entries generate many more classes than the
+    // compiled-code cache holds (Tuning.CodegenCacheMaxEntries, read
+    // once per JVM), so most of an entry's classes are evicted before
+    // its timed run compiles them again. Disable with
+    // SPARK_GRAFT_WARM=0.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM", "/root/testdata/sf0.001")
     if (warmDir != "0" && new java.io.File(warmDir).isDirectory) {
       val t0 = System.nanoTime()

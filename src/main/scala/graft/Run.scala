@@ -4,8 +4,10 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 
 /** The one runner behind the engine's mains ([[Bench]], [[Verify]],
@@ -15,13 +17,18 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * As a main it holds the measurement modes:
   *   - `probe <sfDir> <reps> q...` times each entry `reps` times under
-  *     [[materialize]] and prints `name rep sec cpu_ms jobs` per rep
-  *     (`cpu_ms`: CPU time of the JVM's Java threads, the benchmark's
-  *     `cpu_ms_per_op` definition); the last rep also prints every Spark
-  *     job it ran (start offset, duration, description), the local
-  *     stand-in for the Spark UI's Jobs page. Each rep runs under the
-  *     job description `<name> rep <rep>`, so its jobs, AQE stage jobs
-  *     included, carry the entry's name.
+  *     [[materialize]] and prints `name rep sec cpu_ms jobs compiles
+  *     compile_ms` per rep (`cpu_ms`: CPU time of the JVM's Java
+  *     threads, the benchmark's `cpu_ms_per_op` definition; `compiles`
+  *     and `compile_ms`: Janino compiles of generated code and their
+  *     time, from Spark's `CodegenMetrics` and `CodeGenerator`, so a
+  *     warm rep that still compiles shows a compiled-code cache miss);
+  *     the last rep also prints every Spark job it ran (start offset,
+  *     duration, description), the local stand-in for the Spark UI's
+  *     Jobs page. Each rep runs under the job description `<name> rep
+  *     <rep>`, so its jobs, AQE stage jobs and jobs on
+  *     [[graft.engine.Parallel]] threads included, carry the entry's
+  *     name.
   *   - `plan <sfDir> <suffix> q...` writes each entry's [[finalPlan]] to
   *     `plans/<name>_<suffix>.txt`, so a before/after plan diff can back
   *     an optimization claim.
@@ -112,14 +119,18 @@ object Run {
     spark.sparkContext.addSparkListener(jobs)
     for ((name, fn) <- entries; rep <- 1 to reps) {
       val cpu0 = threadCpu()
+      val (compiles0, compileNs0) = compiled()
       val t0 = System.nanoTime()
       val err = try { labelled(spark, s"$name rep $rep")(materialize(fn(spark, sfDir))); None }
       catch { case e: Throwable => Some(e.toString.linesIterator.next().take(160)) }
       val sec = (System.nanoTime() - t0) / 1e9
       val cpuMs = cpuMsSince(cpu0)
+      val (compiles1, compileNs1) = compiled()
       val ran = jobs.drain()
       spark.catalog.clearCache()
-      println(f"$name%s $rep%d $sec%.3f $cpuMs%.0f ${ran.size}%d${err.fold("")(" ERR " + _)}")
+      println(f"$name%s $rep%d $sec%.3f $cpuMs%.0f ${ran.size}%d " +
+        f"${compiles1 - compiles0}%d ${(compileNs1 - compileNs0) / 1e6}%.0f" +
+        err.fold("")(" ERR " + _))
       if (rep == reps) {
         val first = ran.map(_.startMs).minOption.getOrElse(0L)
         ran.foreach { j =>
@@ -143,6 +154,11 @@ object Run {
     }
     spark.stop()
   }
+
+  /** Janino compiles of generated code so far in this JVM, and their
+    * total time in ns. A compiled-code cache hit counts in neither. */
+  def compiled(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   private val threadBean = ManagementFactory.getThreadMXBean
 

@@ -32,23 +32,20 @@ object SparkEntry {
     // Independent ingest writes are independent Spark jobs — submit
     // them concurrently; the scheduler interleaves their stages across
     // the executor pool (on a cluster this divides ingest wall time).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val writes = Seq[Future[Any]](
+    graft.engine.Parallel.all(
       // the whole-corpus segment root behind q164 and q105b
-      Future(graft.operators.Search.ensureBm25Index(spark, sfDir,
-        graft.engine.Tables.table(spark, sfDir, "documents"))),
-      Future(SqlSurface.ensureBucketedLineitem(spark, sfDir)),
-      Future(SqlSurface.ensureBucketedOrders(spark, sfDir)),
-      Future(SqlSurface.ensureZorderedLineitem(spark, sfDir)),
-      Future(graft.engine.Bucketing.ensurePartitioned(spark, sfDir,
+      () => graft.operators.Search.ensureBm25Index(spark, sfDir,
+        graft.engine.Tables.table(spark, sfDir, "documents")),
+      () => SqlSurface.ensureBucketedLineitem(spark, sfDir),
+      () => SqlSurface.ensureBucketedOrders(spark, sfDir),
+      () => SqlSurface.ensureZorderedLineitem(spark, sfDir),
+      () => graft.engine.Bucketing.ensurePartitioned(spark, sfDir,
         graft.engine.Tables.table(spark, sfDir, "documents"),
-        Seq("lang"), "docs")),
-      // sequential inside one future: ensurePqIndex derives from the
+        Seq("lang"), "docs"),
+      // sequential inside one piece: ensurePqIndex derives from the
       // IVF index and shares its catalog table — racing them in two
       // threads would double-build the table
-      Future {
+      () => {
         graft.operators.Similarity.ensureIvfLearnedIndex(spark, sfDir,
           graft.engine.Tables.table(spark, sfDir, "embeddings"),
           "vec_id < 8")
@@ -56,25 +53,24 @@ object SparkEntry {
           graft.engine.Tables.table(spark, sfDir, "embeddings"),
           "vec_id < 8")
       },
-      Future(graft.engine.Bucketing.ensurePartitionedZordered(spark, sfDir,
+      () => graft.engine.Bucketing.ensurePartitionedZordered(spark, sfDir,
         graft.engine.Tables.table(spark, sfDir, "documents"),
-        "lang", Seq("n_chars", "doc_id"), "docs")),
-      Future(graft.queries.LlmSurface.ivfAppendStage(spark, sfDir)),
+        "lang", Seq("n_chars", "doc_id"), "docs"),
+      () => graft.queries.LlmSurface.ivfAppendStage(spark, sfDir),
       // the PQ-append base (q175's ingest half) — its own fixture
-      // key, so it races neither the shared IVF/PQ future nor
+      // key, so it races neither the shared IVF/PQ piece nor
       // ivfAppendStage's
-      Future(graft.queries.LlmSurface.pqAppendStage(spark, sfDir)),
+      () => graft.queries.LlmSurface.pqAppendStage(spark, sfDir),
       // the pre-rollover family template (q196 clones it per run)
-      Future(graft.queries.LlmSurface.rolloverStage(spark, sfDir)),
+      () => graft.queries.LlmSurface.rolloverStage(spark, sfDir),
       // the tile-partitioned geo layout (q245-q248, q265-q266)
-      Future(graft.queries.LlmSurface.geoDir(spark, sfDir)),
+      () => graft.queries.LlmSurface.geoDir(spark, sfDir),
       // the sparse-mapping index behind the missing agg (q260)
-      Future(graft.queries.LlmSurface.segIndexSparseDir(spark, sfDir)),
-      // sequential inside one future: all three roots commit via
+      () => graft.queries.LlmSurface.segIndexSparseDir(spark, sfDir),
+      // sequential inside one piece: all three roots commit via
       // single-writer manifest generations
-      Future(graft.queries.LlmSurface.segIndexStage(spark, sfDir)),
-      Future(SqlSurface.ensureZonemappedLineitem(spark, sfDir)),
-      Future(SqlSurface.zonemapAppendStage(spark, sfDir)))
-    writes.foreach(Await.result(_, Duration.Inf))
+      () => graft.queries.LlmSurface.segIndexStage(spark, sfDir),
+      () => SqlSurface.ensureZonemappedLineitem(spark, sfDir),
+      () => SqlSurface.zonemapAppendStage(spark, sfDir))
   }
 }

@@ -2,7 +2,9 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Session knob the engine's sketch aggregates depend on.
+/** Session knobs the engine sets on every session it builds.
+  *
+  * The first is the one the engine's sketch aggregates depend on.
   *
   * `minhash_agg` / `simhash_agg` are `TypedImperativeAggregate`s, so
   * they execute under `ObjectHashAggregateExec`, which falls back to
@@ -85,6 +87,44 @@ object Tuning {
     "spark.sql.sources.parallelPartitionDiscovery.threshold"
   val ParallelListingThreshold: Int = 512
 
+  /** Room for 2048 generated classes in Spark's compiled-code cache
+    * (Spark default 100). One engine_suite run compiles about 280
+    * distinct classes, so with the default LRU every sample of an entry
+    * that runs between other entries recompiled all of its classes:
+    * 22–84 Janino compiles per warm run (q196 84, q253 42, q164 34,
+    * q43 22), about 15 ms each; q253 run right after q196 recompiled
+    * 33 (`CodegenCacheSpec`). With a large cache, warm compiles fell
+    * to 0 on 9 of 10 entries; the tenth was the stage-id drift below.
+    * A static setting: Spark sizes the cache once per JVM, when
+    * `CodeGenerator` is first used (the first compile), so only a
+    * builder can set it and [[ensure]] skips it. */
+  val CodegenCacheMaxEntriesKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheMaxEntries: Int = 2048
+
+  /** Name whole-stage classes without the codegen stage id (Spark
+    * default true). The id is part of the generated source
+    * (`GeneratedIteratorForCodegenStage6`) and so of the cache key, and
+    * AQE numbers stages in the order it plans them, which differs
+    * between runs of the same plan: q253 still recompiled 4–20 classes
+    * per warm run with a large cache (10 in `CodegenCacheSpec`), and 0
+    * with this off. The id only
+    * names the class; plans, `*(n)` markers in explain output and
+    * results are unchanged. */
+  val CodegenIdInClassNameKey = "spark.sql.codegen.useIdInClassName"
+
+  /** Let sessions share one artifact class loader (Spark default true).
+    * The compiled-code cache is keyed on (class loader, source), and
+    * with isolation on each `spark.newSession()` gets a loader of its
+    * own, so every per-request session of [[graft.api.HttpApi]]
+    * recompiled byte-identical code: 7–9 classes per request for a
+    * lineitem `GROUP BY` aggregate, 0 with this off. Isolation only
+    * separates jars, files and archives added to a session; graft adds
+    * none, and the query gate refuses `ADD JAR|FILE|ARCHIVE` (a
+    * command), so no request can add one either. A session reads it
+    * once, when it first uses its artifacts; the builder's value
+    * reaches every `newSession()`. */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** Every knob above with the engine's value: [[apply]] and [[ensure]]
     * both walk this one list, so they cannot drift apart. */
   val Settings: Seq[(String, String)] = Seq(
@@ -92,22 +132,30 @@ object Tuning {
     AutoBucketedScanKey -> "false",
     InferTimestampNtzKey -> "false",
     CachedPlanAqeKey -> "true",
-    ParallelListingThresholdKey -> ParallelListingThreshold.toString)
+    ParallelListingThresholdKey -> ParallelListingThreshold.toString,
+    CodegenCacheMaxEntriesKey -> CodegenCacheMaxEntries.toString,
+    CodegenIdInClassNameKey -> "false",
+    ArtifactIsolationKey -> "false")
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     Settings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
-  /** Apply every setting on a live session iff the user never set it —
-    * never overrides an explicit user setting. "Explicitly set" is
-    * membership in `spark.conf.getAll` (the session's settings map,
-    * which holds only set entries, not registered defaults): comparing
-    * against the default VALUE would clobber a user who deliberately
-    * set a knob back to its default.
+  /** Apply every runtime setting of `settings` (default: [[Settings]])
+    * on a live session iff the user never set it — never overrides an
+    * explicit user setting. "Explicitly set" is membership in
+    * `spark.conf.getAll` (the session's settings map, which holds only
+    * set entries, not registered defaults): comparing against the
+    * default VALUE would clobber a user who deliberately set a knob
+    * back to its default. Static settings (`spark.conf.isModifiable`
+    * false, such as [[CodegenCacheMaxEntriesKey]]) are skipped: a live
+    * session cannot take them, and `spark.conf.set` throws for them.
     */
-  def ensure(spark: SparkSession): Unit = {
+  def ensure(spark: SparkSession,
+             settings: Seq[(String, String)] = Settings): Unit = {
     val explicitlySet = spark.conf.getAll.keySet
-    Settings.foreach { case (k, v) =>
-      if (!explicitlySet.contains(k)) spark.conf.set(k, v)
+    settings.foreach { case (k, v) =>
+      if (!explicitlySet.contains(k) && spark.conf.isModifiable(k))
+        spark.conf.set(k, v)
     }
   }
 }

@@ -409,7 +409,7 @@ object SegmentedIndex {
         // straggler tail.
         segPostings(d, nb, an).write.mode("overwrite")
           .partitionBy("tb").parquet(tmp.getPath)
-        inParallel(
+        graft.engine.Parallel.all(
           () => writeDict(d.sparkSession, tmp, nb),
           () => writeStored(d, tmp, nb),
           () => cf.foreach(t =>
@@ -434,21 +434,6 @@ object SegmentedIndex {
     * block granularity (its BlockTreeTermsWriter packs 128 docs per
     * block and stores a max impact per block). */
   private[operators] val ImpactBlockSize: Long = 128L
-
-  /** Run independent ingest writes as concurrent Spark jobs (guide
-    * §2.6, the [[graft.SparkEntry.stage]] pattern brought inside one
-    * segment commit): Spark's scheduler happily runs several jobs at
-    * once — the writes were only sequential because the code called
-    * them sequentially, which on the many-tiny-jobs ingest paths left
-    * the executor pool idle during every job's driver-side planning
-    * gap. Blocks until every write finishes; the first failure
-    * propagates (the enclosing atomicStage aborts the whole commit). */
-  private def inParallel(work: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    work.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
-  }
 
   /** Fixed artifact schemas (r18 optimization): every one of these
     * files is written by THIS object with exactly these columns, so
@@ -5233,7 +5218,7 @@ object SegmentedIndex {
     // manifest publish below — run them (and the segment's artifact
     // writes) as concurrent jobs (guide §2.6); the stats pass above
     // already materialized the cached batch they all read
-    inParallel(
+    graft.engine.Parallel.all(
       () => graft.engine.Bucketing.atomicStage(
         new java.io.File(root, delName)) {
           tmp => d.select(col("doc_id").cast("long"))
@@ -5248,7 +5233,7 @@ object SegmentedIndex {
             // then the independent artifact chains concurrently
             segPostings(d, nb, an).write.mode("overwrite")
               .partitionBy("tb").parquet(tmp.getPath)
-            inParallel(
+            graft.engine.Parallel.all(
               () => writeDict(d.sparkSession, tmp, nb),
               () => writeStored(d, tmp, nb),
               () => cfTripleOf(root).foreach(t =>
@@ -7368,7 +7353,7 @@ object SegmentedIndex {
           .repartition(nb, col("tb")) // one write task per bucket
           .write.mode("overwrite").partitionBy("tb")
           .parquet(tmp.getPath)
-        inParallel(
+        graft.engine.Parallel.all(
           () => writeDict(spark, tmp, nb),
           () => writeStored(st, tmp, nb),
           // regenerate the completion-field artifact for the merged
@@ -7421,7 +7406,7 @@ object SegmentedIndex {
           .repartition(nb, col("tb")) // one write task per bucket
           .write.mode("overwrite").partitionBy("tb")
           .parquet(tmp.getPath)
-        inParallel(
+        graft.engine.Parallel.all(
           () => writeDict(spark, tmp, nb),
           () => writeStored(storedLive.drop("seg"), tmp, nb),
           // the merged segment's completion-field artifact derives from

@@ -39,11 +39,9 @@ class RunSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("Run.labelled names every job it starts, AQE's query-stage jobs included") {
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val label = "q43_approx_distinct rep 1"
-    // Descriptions of the jobs started; ends are counted so the wait
-    // below covers every job the action ran.
+  /** Descriptions of the Spark jobs `body` starts. Ends are counted so
+    * the wait covers every job it ran. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
     val started = new ConcurrentLinkedQueue[String]()
     val ended = new AtomicInteger()
     val listener = new SparkListener {
@@ -54,17 +52,43 @@ class RunSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Run.labelled(spark, label)(
-        Run.materialize(SparkEntry.queries("q43_approx_distinct")(spark, sf001)))
-      assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+      body
       val deadline = System.nanoTime() + 10000000000L
       while (ended.get < started.size && System.nanoTime() < deadline) Thread.sleep(5)
     } finally spark.sparkContext.removeSparkListener(listener)
+    started.toArray(Array.empty[String]).toSeq
+  }
+
+  test("Run.labelled names every job it starts, AQE's query-stage jobs included") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val label = "q43_approx_distinct rep 1"
+    val descs = jobDescriptions(Run.labelled(spark, label)(
+      Run.materialize(SparkEntry.queries("q43_approx_distinct")(spark, sf001))))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
     // AQE runs each query stage of q43's shuffles as a job of its own,
     // submitted from another thread, before the write's result job.
-    val descs = started.toArray(Array.empty[String]).toSeq
     assert(descs.size >= 2 && descs.forall(_ == label), descs.mkString("\n"))
     spark.catalog.clearCache()
+  }
+
+  test("Run.labelled names the jobs a segment append starts on its " +
+    "parallel writer threads") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-run-label").toString
+    val docs = Seq((1L, "x x y"), (2L, "x z"), (3L, "y z")).toDF("doc_id", "text")
+    // Two appends under two labels: a writer thread kept from the first
+    // (a shared pool's) would still carry the first label in the second.
+    Seq("a", "b").foreach { batch =>
+      val label = s"append $batch rep 1"
+      val descs = jobDescriptions(Run.labelled(spark, label)(
+        graft.operators.SegmentedIndex.append(spark, root,
+          docs.filter($"doc_id" =!= (if (batch == "a") 1L else 2L)), batch,
+          nBuckets = 4)))
+      // the dictionary and stored-field writes run on
+      // graft.engine.Parallel threads, after the stats and postings jobs
+      // on the caller's thread
+      assert(descs.size >= 4 && descs.forall(_ == label), descs.mkString("\n"))
+    }
   }
 
   test("Bench's per-entry line and summary parse whatever an error text holds") {

@@ -372,4 +372,23 @@ class HttpApiSpec extends SparkSpec {
       java.nio.file.Files.delete(secret)
     }
   }
+
+  test("ADD JAR, ADD FILE and ADD ARCHIVE get 401 and add nothing: with " +
+    "artifact isolation off, an added artifact would reach every session") {
+    assert(spark.conf.get(graft.engine.Tuning.ArtifactIsolationKey) == "false")
+    val artifact = java.nio.file.Files.createTempFile("http-artifact", ".jar")
+    val sc = spark.sparkContext
+    def added = (sc.listJars() ++ sc.listFiles() ++ sc.listArchives())
+      .filter(_.contains(artifact.getFileName.toString))
+    try withApi { (base, _) =>
+      Seq("JAR", "FILE", "ARCHIVE").foreach { kind =>
+        val sql = s"ADD $kind $artifact"
+        val r = get(s"$base/query/?dbDriver=parquet&dbName=${enc(sf001)}" +
+          s"&query=${enc(sql)}")
+        assert(r.statusCode() == 401, s"$sql: ${r.body()}")
+        assert(r.body().startsWith("""{"error":"unauthorized"""), r.body())
+      }
+      assert(added.isEmpty, added)
+    } finally java.nio.file.Files.delete(artifact)
+  }
 }
