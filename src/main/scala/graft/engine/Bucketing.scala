@@ -512,15 +512,4 @@ object Bucketing {
     deleteRecursively(new java.io.File(root,
       tableName.toLowerCase(java.util.Locale.ROOT)))
   }
-
-  /** Co-located equi-join of two bucketed catalog tables on their
-    * bucket keys. With matching bucket counts, neither side shuffles.
-    */
-  def coLocatedJoin(spark: SparkSession, leftTable: String,
-                    rightTable: String, leftKey: String,
-                    rightKey: String): DataFrame = {
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey))
-  }
 }

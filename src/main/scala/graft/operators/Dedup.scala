@@ -197,31 +197,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** [[minhashNearDups]] with stage materialization to parquet instead
-    * of `.persist()` — the shape a 100 TB run actually uses (SCALE.md):
-    * shingles and signatures are written once to `workDir` and each
-    * downstream stage reads the files, so no stage depends on cache
-    * residency, stages are independently restartable, and the
-    * intermediates are inspectable. Results are identical to the
-    * in-memory variant (spec-asserted).
-    */
-  def minhashNearDupsStaged(docs: DataFrame, workDir: String,
-                            threshold: Double = 0.8,
-                            k: Int = 64, bands: Int = 16): DataFrame = {
-    val spark = docs.sparkSession
-    TextOps.withShingles(docs)
-      .select("doc_id", "shingles")
-      .write.mode("overwrite").parquet(s"$workDir/shingled")
-    val shingled = spark.read.parquet(s"$workDir/shingled")
-    minhashSignatures(shingled, k)
-      .write.mode("overwrite").parquet(s"$workDir/sigs")
-    val sigs = spark.read.parquet(s"$workDir/sigs")
-    val cands = lshCandidates(sigs, bands, k / bands)
-    verifyJaccard(cands, shingled)
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
   /** MinHash near-dup pairs through a content-addressed parquet stage:
     * compute once, reuse everywhere. The shingle → signature → LSH →
     * verify pipeline is the dominant cost of every query that COMPOSES
@@ -248,9 +223,7 @@ object Dedup {
     // id pairs, so a corpus with the same texts under a different id
     // assignment must mint a new stage, not reuse ids from the old one.
     // Note the fingerprint itself is one full column scan per call —
-    // the price of self-validation. A pipeline that manages staging
-    // explicitly (ingest once, query many) uses minhashNearDupsStaged
-    // with its own workDir and skips the scan entirely.
+    // the price of self-validation.
     val fp = docs
       .agg(count(lit(1)).cast("long"),
         coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)),
@@ -432,19 +405,14 @@ object Dedup {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val shB = TextOps.withShingles(batch)
       .select("doc_id", "shingles").persist(lvl)
-    // In production the corpus side's shingles/signatures come from a
-    // stage (see incrementalNearDupsStaged); computing them here keeps
-    // the operator self-contained without changing the join topology.
     val shC = TextOps.withShingles(corpus)
       .select("doc_id", "shingles").persist(lvl)
     batchDrivenPairs(shB, shC, minhashSignatures(shC, k), threshold, k, bands)
   }
 
-  /** The shared batch-driven join+verify body of the two incremental
-    * variants: batch bands probe (corpus ∪ batch) bands, pairs are
-    * normalized/deduped on ids, then exact-verified. One definition so
-    * the "results identical" contract between the variants cannot
-    * silently drift.
+  /** The batch-driven join+verify body of [[incrementalNearDups]]:
+    * batch bands probe (corpus ∪ batch) bands, pairs are
+    * normalized/deduped on ids, then exact-verified.
     *
     * PRECONDITION (enforced): batch and corpus doc_ids are disjoint.
     * A shared id would never pair (`a.doc_id =!= b.doc_id` treats the
@@ -478,28 +446,6 @@ object Dedup {
     verifyJaccard(cands, shB.union(shC))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** [[incrementalNearDups]] against a STAGED corpus: the corpus side's
-    * shingles and signatures are read from the parquet stage that
-    * [[minhashNearDupsStaged]] materializes (`workDir/shingled`,
-    * `workDir/sigs`) instead of being recomputed — completing the
-    * incremental promise end-to-end: a daily batch pays for its own
-    * shingling/signing plus the bucket-local join, and the 100 TB
-    * corpus contributes files it wrote once at ingest. Results are
-    * identical to the self-contained variant (spec-asserted).
-    */
-  def incrementalNearDupsStaged(batch: DataFrame, corpusWorkDir: String,
-                                threshold: Double = 0.8,
-                                k: Int = 64, bands: Int = 16): DataFrame = {
-    val spark = batch.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val shB = TextOps.withShingles(batch)
-      .select("doc_id", "shingles").persist(lvl)
-    batchDrivenPairs(shB,
-      graft.engine.Pq.read(spark, s"$corpusWorkDir/shingled"),
-      graft.engine.Pq.read(spark, s"$corpusWorkDir/sigs"),
-      threshold, k, bands)
   }
 
   /** Corpus-frequency boilerplate scoring (the C4/Gopher quality-rule
@@ -660,10 +606,9 @@ object Dedup {
     */
   /** md5 digests of a doc's word n-grams as an array expression over a
     * `toks` column — the shared gram identity of [[decontaminate]] and
-    * its streaming twin
-    * [[graft.streaming.EventStreams.decontaminateStream]].
+    * [[exactSubstrDedup]].
     */
-  private[graft] def gramDigestArrayExpr(n: Int): String = {
+  private def gramDigestArrayExpr(n: Int): String = {
     require(n >= 2, s"decontamination gram size must be >= 2: $n")
     val parts = (0 until n).map(j => s"toks[i + $j]").mkString(", ' ', ")
     s"transform(sequence(0, size(toks) - $n), i -> md5(concat($parts)))"
@@ -733,17 +678,6 @@ object Dedup {
         col("overlap_frac") >= lit(threshold))
       .orderBy("doc_id")
   }
-
-  /** The benchmark's distinct gram digests as a driver-side value, for
-    * closure-shipping into a stream. The collect is sized by the
-    * BENCHMARK — eval sets, MBs by construction — never the corpus;
-    * the same bound that justifies [[decontaminate]]'s broadcast.
-    */
-  def benchmarkDigests(benchmark: DataFrame, n: Int = 4): Seq[String] =
-    gramStream(benchmark, n)
-      .select("g").distinct()
-      .as[String](org.apache.spark.sql.Encoders.STRING)
-      .collect().toSeq
 
   /** Resolve near-dup PAIRS into duplicate CLUSTERS (connected
     * components): every doc's cluster id is the minimum doc_id

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,17 +9,11 @@ import org.apache.spark.sql.types._
   * Media are opaque `BinaryType` columns plus a typed metadata struct —
   * the layout a 100 TB training-data lake actually uses (parquet with a
   * binary payload column, partitioned by modality/date; payloads never
-  * pass through the driver). The decode step is a STUB in this container
-  * (no image/audio codecs are installed): [[fakeDecode]] derives
-  * deterministic pseudo-features from the bytes so the surrounding
-  * plumbing — schema, batched per-partition processing, feature schema,
-  * partition sizing — is real and testable end-to-end. Swap the stub for
-  * a JNI/codec call without touching anything else.
-  *
-  * Scala-side the batch shape is `mapPartitions` over an iterator of rows
-  * (the JVM analogue of arrow-batched Python UDFs): decode state (codec
-  * contexts, model weights) is initialized once per partition, amortized
-  * over every row in the batch.
+  * pass through the driver). No image/audio codecs are installed, so
+  * the byte-level steps here ([[sampleFrames]], [[resizeStub]]) are
+  * STUBS that keep the surrounding plumbing — schema, exploded frame
+  * shape, partition sizing — real and testable end-to-end;
+  * [[withByteStats]] needs no codec at all.
   */
 object Multimodal {
 
@@ -36,54 +30,6 @@ object Multimodal {
   val mediaSchema: StructType =
     StructType(metaSchema.fields :+
       StructField("payload", BinaryType, nullable = false))
-
-  /** Feature record produced by the (stubbed) decoder. */
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("checksum", LongType, nullable = false),
-    StructField("feature", ArrayType(DoubleType, containsNull = false),
-      nullable = false)))
-
-  /** STUB decoder: a real implementation would hand `payload` to an
-    * image/audio codec here. The deterministic fake derives an 8-dim
-    * "feature" from byte statistics (mean of each of 8 byte-position
-    * strides) so tests can assert exact values. Runs per-partition —
-    * decoder init happens once per task, not once per row.
-    */
-  def fakeDecode(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val out = media.select("media_id", "modality", "payload").rdd
-      .mapPartitions { rows =>
-        // per-partition init (codec context stand-in)
-        val dims = 8
-        rows.map { r =>
-          val id = r.getLong(0)
-          val mod = r.getString(1)
-          val bytes = r.getAs[Array[Byte]](2)
-          val sums = new Array[Double](dims)
-          val counts = new Array[Long](dims)
-          var i = 0
-          while (i < bytes.length) {
-            val d = i % dims
-            sums(d) += (bytes(i) & 0xff).toDouble
-            counts(d) += 1L
-            i += 1
-          }
-          var checksum = 0L
-          i = 0
-          while (i < bytes.length) {
-            checksum = (checksum * 131 + (bytes(i) & 0xff)) % 2147483647L
-            i += 1
-          }
-          val feat = (0 until dims).map(d =>
-            if (counts(d) == 0) 0.0 else sums(d) / counts(d)).toArray
-          Row(id, mod, bytes.length.toLong, checksum, feat.toSeq)
-        }
-      }
-    spark.createDataFrame(out, featureSchema)
-  }
 
   /** STUB frame sampler: every `stride`-th fixed-size block of the
     * payload stands in for a decoded video frame. Output one row per
@@ -141,21 +87,4 @@ object Multimodal {
       .withColumn("n_bytes", expr(s"bigint(octet_length($payloadCol))"))
       .withColumn("digest", md5(col(payloadCol)))
       .withColumn("head_hex", expr(s"hex(substring($payloadCol, 1, 4))"))
-
-  /** Synthesize a deterministic in-memory media table (for tests and the
-    * demo query): payload bytes derive from the id. */
-  def synthetic(spark: SparkSession, n: Int): DataFrame = {
-    val rows = (0 until n).map { i =>
-      val mod = Seq("image", "audio", "video")(i % 3)
-      val len = 64 + (i * 37) % 512
-      val bytes = Array.tabulate[Byte](len)(j => ((i * 31 + j * 7) % 251).toByte)
-      Row(i.toLong, mod, s"application/x-fake-$mod",
-        if (mod == "image") Integer.valueOf(64 + i % 64) else null,
-        if (mod == "image") Integer.valueOf(64 + i % 48) else null,
-        if (mod != "image") java.lang.Long.valueOf(1000L + i) else null,
-        bytes)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 4), mediaSchema)
-  }
 }

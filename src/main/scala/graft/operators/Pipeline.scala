@@ -313,9 +313,9 @@ object Pipeline {
       .filter(col("n") > 0)
   }
 
-  /** Replay a CDC log directory written by
-    * [[graft.streaming.EventStreams.cdcLogSink]] (immutable
-    * `batch=<epoch>/` segments) onto `base` with [[snapshotAt]]:
+  /** Replay a CDC log directory of immutable `batch=<epoch>/`
+    * segments (as [[absorbSummaryBatch]] and [[absorbTopKBatch]] write
+    * them) onto `base` with [[snapshotAt]]:
     * segments apply in epoch order; `version` (default: all) bounds
     * the prefix, so any historical snapshot stays readable. The
     * directory listing is O(log length) driver work — the same
@@ -447,13 +447,12 @@ object Pipeline {
       .select(bucketCol(grp, nb).as("gb")).distinct()
       .collect().map(_.getInt(0)).toSet
 
-  /** One epoch of the streaming-lakehouse loop — the shared body of
-    * [[graft.streaming.EventStreams.maintainedSummarySink]] and its
-    * oracled batch twin (q158): the change batch lands as the
-    * immutable CDC log segment `batch=<epoch>/` AND is absorbed into
-    * the bucketed versioned summary store via [[maintainAgg]] — the
-    * materialized view advances in O(|batch|) while the log keeps
-    * every snapshot readable.
+  /** One epoch of the maintained-summary loop (oracled by q158): the
+    * change batch lands as the immutable CDC log segment
+    * `batch=<epoch>/` AND is absorbed into the bucketed versioned
+    * summary store via [[maintainAgg]] — the materialized view
+    * advances in O(|batch|) while the log keeps every snapshot
+    * readable.
     *
     * Per epoch the store rewrites ONLY the buckets containing touched
     * groups (every group [[maintainAgg]]'s minus/plus sides can
@@ -552,12 +551,10 @@ object Pipeline {
     }
   }
 
-  /** One epoch of the NON-ABELIAN streaming-lakehouse loop — the
-    * top-k sibling of [[absorbSummaryBatch]] and the shared body of
-    * [[graft.streaming.EventStreams.maintainedTopKSink]] and its
-    * oracled batch twin (q173): the change batch lands as the
-    * immutable log segment `batch=<epoch>/` AND advances the
-    * bucketed versioned per-group top-`k` view store via
+  /** One epoch of the NON-ABELIAN maintained-view loop — the top-k
+    * sibling of [[absorbSummaryBatch]] (oracled by q173): the change
+    * batch lands as the immutable log segment `batch=<epoch>/` AND
+    * advances the bucketed versioned per-group top-`k` view store via
     * [[maintainTopK]] — touched groups re-read from the pre-batch
     * snapshot (the honest non-abelian contract: a demoted member's
     * replacement was never materialized), untouched groups pass
@@ -636,12 +633,6 @@ object Pipeline {
       .filter(f => f.isFile && f.getName.startsWith("v="))
       .map(_.getName.stripPrefix("v=").toLong).sorted
 
-  /** The latest committed summary strictly before `epoch`, if any. */
-  def latestSummaryBefore(spark: org.apache.spark.sql.SparkSession,
-      summaryDir: String, epoch: Long): Option[DataFrame] =
-    summaryVersions(summaryDir).filter(_ < epoch).lastOption
-      .map(e => readStore(spark, summaryDir, e))
-
   /** Read the maintained summary at `version` (default: latest). */
   def readSummary(spark: org.apache.spark.sql.SparkSession,
       summaryDir: String, version: Long = Long.MaxValue): DataFrame = {
@@ -700,27 +691,25 @@ object Pipeline {
     * versions by reference, so this is per-bucket reference
     * counting). Returns how many versions were pruned. Without it
     * [[absorbSummaryBatch]] grows one version per epoch FOREVER — the
-    * last unbounded-growth loop in the streaming-lakehouse composition
+    * last unbounded-growth loop in the maintained-summary composition
     * (the log side already has [[rebaseLog]], the zone-map side
     * `compactManifest`+`vacuum`).
     *
     * Contract: retention trades TIME TRAVEL for space — after pruning,
     * [[readSummary]] at a pruned version fails loudly (its `require`)
     * rather than silently serving a newer one. Maintenance stays
-    * correct because [[latestSummaryBefore]] only ever consults the
-    * HIGHEST version below the incoming epoch and pruning keeps the
-    * newest versions: any `keepLast >= 1` preserves the maintenance
-    * chain. Epoch-replay safety (the exactly-once argument in
-    * [[absorbSummaryBatch]]) needs the retry's predecessor version
-    * still present, so prune with `keepLast` covering the deepest
-    * possible replay — Spark replays at most the last unCommitted
-    * epoch, so `keepLast >= 2` is safe under single-writer streaming
-    * (the [[graft.streaming.EventStreams]] sinks ENFORCE that floor
-    * before enabling pruning; a replay with `keepLast = 1` would fall
-    * into the bootstrap path and re-commit the epoch with DIFFERENT
-    * bytes, breaking the identical-bytes REPLACE argument). A BATCH
-    * caller whose absorbs have all returned has no replayable epoch,
-    * so `keepLast = 1` stays legitimate there (q163's roundtrip).
+    * correct because [[absorbSummaryBatch]] (and [[absorbTopKBatch]])
+    * only ever read the HIGHEST committed version below the incoming
+    * epoch as the predecessor, and pruning keeps the newest versions:
+    * any `keepLast >= 1` preserves the maintenance chain. Re-running
+    * an epoch (the exactly-once argument in [[absorbSummaryBatch]])
+    * needs that epoch's predecessor version still present, so a
+    * caller that may retry its last epoch prunes with `keepLast >= 2`;
+    * with `keepLast = 1` the retry would fall into the bootstrap path
+    * and re-commit the epoch with DIFFERENT bytes, breaking the
+    * identical-bytes REPLACE argument. A caller whose absorbs have all
+    * returned has nothing to retry, so `keepLast = 1` is legitimate
+    * there (q163's roundtrip).
     * Delta directories of epochs STRICTLY NEWER than the newest
     * committed version are never swept — they belong to an in-flight
     * or replayable absorb whose manifest commit hasn't landed.

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *    rename (the Delta commit-log shape): data directories are
   *    invisible until referenced, so a crashed writer leaves only an
   *    orphan (reclaimed by [[vacuum]]), never a torn index — and two
-  *    racing manifest writers (a streaming append vs a maintenance
-  *    merge) collide on the generation number, so the loser FAILS
+  *    racing manifest writers (an append vs a maintenance merge)
+  *    collide on the generation number, so the loser FAILS
   *    LOUDLY and re-reads instead of silently dropping the winner's
   *    committed segment;
   *  - [[merge]] folds all live segments into one, APPLIES the
@@ -175,13 +175,14 @@ object SegmentedIndex {
     (Seq(cf._1, cf._2) ++ ctx.toSeq).mkString(":")
   }
 
-  /** The index's completion-field mapping — public introspection
-    * (ES's `GET /idx/_mapping` for the completion field). */
-  def completionFieldOf(rootDir: String): Option[(String, String)] =
+  /** The index's completion-field mapping (ES's `GET /idx/_mapping`
+    * for the completion field); specs read it to check the mapping
+    * survives snapshot, reindex and merge. */
+  private[graft] def completionFieldOf(rootDir: String): Option[(String, String)] =
     cfPairOf(new java.io.File(rootDir))
 
   /** The completion mapping's CONTEXT field, when mapped. */
-  def completionContextOf(rootDir: String): Option[String] =
+  private[graft] def completionContextOf(rootDir: String): Option[String] =
     cfTripleOf(new java.io.File(rootDir)).flatMap(_._3)
 
   /** The federation PRECONDITION, enforced: every multi-index reader
@@ -265,7 +266,7 @@ object SegmentedIndex {
     * create-exclusive atomic rename through the portable seam
     * ([[graft.engine.Fs.renameNoReplace]]). Readers see the previous
     * generation or this one, never a prefix — and a writer racing
-    * another manifest-writing operation (streaming append vs a
+    * another manifest-writing operation (an append vs a
     * maintenance merge/vacuum job) FAILS LOUDLY with
     * FileAlreadyExistsException instead of silently dropping the
     * winner's committed segment from the manifest. Nothing here
@@ -359,8 +360,8 @@ object SegmentedIndex {
     * `batchKey` (the manifest membership check + the staged dir's
     * marker make warm retries no-ops); crash-safe (data first,
     * manifest rename second — a writer that dies mid-way leaves an
-    * invisible orphan). Single-writer appends, the streaming-sink
-    * model; concurrent SAME-batch appenders commit one segment. */
+    * invisible orphan). Single-writer appends; concurrent SAME-batch
+    * appenders commit one segment. */
   def append(spark: SparkSession, rootDir: String, docs: DataFrame,
              batchKey: String, nBuckets: Int = 8,
              analyzer: String = Analyzer.Whitespace.name,
@@ -613,7 +614,7 @@ object SegmentedIndex {
       // initial build writes through nTasks parallel tasks instead
       // of serializing every stored field through one, and the
       // sorted row groups give [[fetch]]'s `doc_id IN` pushdown
-      // footer-stat pruning — for micro-batch streaming segments the
+      // footer-stat pruning — for small incremental segments the
       // few small files per segment are still Lucene's own shape
       .repartitionByRange(nTasks, col("doc_id"))
       .sortWithinPartitions("doc_id")
@@ -4898,44 +4899,15 @@ object SegmentedIndex {
       .limit(kBuckets)
   }
 
-  /** Family-wide aggregations — every facet family routed through
-    * [[familyRoots]] the way [[searchFamily]] already routes search:
-    * analytics over a rolled index family without manual fan-out
-    * (ES's `GET /<stem>-star/_search` with `aggs`). Because a document
-    * lives in exactly one family member, each aggregation equals the
-    * same aggregation over one combined index (the oracle pins
-    * [[familyStatsFacet]]; the others share the (_index, _id)
-    * identity argument of [[multiFacet]]). */
-  def familyFacet(spark: SparkSession, aliasPath: String,
-                  terms: Seq[String], field: String,
-                  kBuckets: Int): DataFrame =
-    multiFacet(spark, familyRoots(aliasPath), terms, field, kBuckets)
-
-  /** See [[familyFacet]]. */
+  /** Family-wide stats aggregation — [[multiStatsFacet]] routed
+    * through [[familyRoots]] the way [[searchFamily]] already routes
+    * search: analytics over a rolled index family without manual
+    * fan-out (ES's `GET /<stem>-star/_search` with `aggs`). Because a
+    * document lives in exactly one family member, it equals the same
+    * aggregation over one combined index. */
   def familyStatsFacet(spark: SparkSession, aliasPath: String,
                        terms: Seq[String], field: String): DataFrame =
     multiStatsFacet(spark, familyRoots(aliasPath), terms, field)
-
-  /** See [[familyFacet]]. */
-  def familyHistogramFacet(spark: SparkSession, aliasPath: String,
-                           terms: Seq[String], field: String,
-                           interval: Long): DataFrame =
-    multiHistogramFacet(spark, familyRoots(aliasPath), terms, field,
-      interval)
-
-  /** See [[familyFacet]]. */
-  def familyFacetStats(spark: SparkSession, aliasPath: String,
-                       terms: Seq[String], bucketField: String,
-                       statField: String, kBuckets: Int): DataFrame =
-    multiFacetStats(spark, familyRoots(aliasPath), terms, bucketField,
-      statField, kBuckets)
-
-  /** See [[familyFacet]]. */
-  def familySignificantTerms(spark: SparkSession, aliasPath: String,
-                             terms: Seq[String], kTerms: Int,
-                             minDocCount: Long = 3L): DataFrame =
-    multiSignificantTerms(spark, familyRoots(aliasPath), terms,
-      kTerms, minDocCount)
 
   /** Reindex — ES's `_reindex`: reads the source index's LIVE
     * `_source` rows (the stored fields — exactly what ES reindexes;
@@ -7238,11 +7210,8 @@ object SegmentedIndex {
   }
 
   /** Whether the index already holds [[append]]'s segment for this
-    * batch key — one driver-side manifest parse. The replay guard a
-    * MULTI-INDEX writer needs ([[graft.streaming.EventStreams
-    * .rolloverIndexSink]]): append's own membership check only
-    * covers the index it targets, so a re-delivered epoch that
-    * arrives AFTER an alias flip must ask the whole family. */
+    * batch key — one driver-side manifest parse, so a caller can skip
+    * building a batch the index already holds. */
   def hasBatch(rootDir: String, batchKey: String): Boolean = {
     val root = new java.io.File(rootDir)
     if (!hasManifest(root)) return false
@@ -7272,105 +7241,6 @@ object SegmentedIndex {
     val root = new java.io.File(rootDir)
     val (_, segs, _) = readManifest(root)
     mergePrefix(spark, root, segs.size)
-  }
-
-  /** Tiered merge — Lucene's TieredMergePolicy, simplified to one
-    * tier: a no-op while the live segment count stays within
-    * `maxSegments`; above it, fold segments down to the bound,
-    * picking the CHEAPEST fold the tombstone rule allows —
-    * SMALLEST-first, like Lucene, so steady mixed ingest (one big
-    * bulk + many tiny streaming batches) folds the tiny segments
-    * over and over and never rewrites the big one. Selection:
-    *
-    *  - candidates are CONTIGUOUS runs of `toFold` seg entries with
-    *    no del entry between them. Folding such a run into one
-    *    segment AT ITS MANIFEST POSITION, WITHOUT applying any
-    *    tombstones, is exactly semantics-preserving: a del before
-    *    the run never applied to its members and still doesn't; a
-    *    del after the run applied to every member and still does —
-    *    [[tombstones]] expands it against the merged name, whose
-    *    postings are the union of the members'. Stats are the
-    *    member sums (deleted docs keep counting — the Lucene phase);
-    *  - among candidates, fold the one with the smallest total
-    *    token length (write cost);
-    *  - if dels interleave every window, fall back to folding the
-    *    OLDEST PREFIX, which ABSORBS its prefix-scoped tombstones
-    *    (every tombstone in the prefix scopes only to prefix
-    *    segments; every later one follows the merged segment and
-    *    still applies to it).
-    *
-    * This is what bounds merge WRITE AMPLIFICATION under streaming
-    * ingest: each maybeMerge rewrites the cheapest few batches,
-    * never the whole index; [[merge]] stays the full checkpoint.
-    * Returns (segments folded, tombstone segments applied). */
-  def maybeMerge(spark: SparkSession, rootDir: String,
-                 maxSegments: Int): (Int, Int) = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val root = new java.io.File(rootDir)
-    val (_, segs, _) = readManifest(root)
-    val liveCount = segs.count(_.kind == "seg")
-    if (liveCount <= maxSegments) return (0, 0)
-    val toFold = liveCount - maxSegments + 1
-    // del-free contiguous windows of toFold manifest entries, scored
-    // by total token length — O(segments²) driver arithmetic over a
-    // merge-bounded list
-    val windows = segs.indices
-      .filter(i => i + toFold <= segs.size &&
-        segs.slice(i, i + toFold).forall(_.kind == "seg"))
-    if (windows.nonEmpty) {
-      val best = windows.minBy(i =>
-        (segs.slice(i, i + toFold).map(_.totalLen).sum, i))
-      mergeRun(spark, root, best, toFold)
-    } else {
-      // every window is del-broken: fold the oldest prefix (absorbs
-      // its prefix-scoped tombstones)
-      val prefixEnd = segs.zipWithIndex.filter(_._1.kind == "seg")
-        .apply(toFold - 1)._2 + 1
-      mergePrefix(spark, root, prefixEnd)
-    }
-  }
-
-  /** Fold the del-free run `segs[start, start+len)` into one segment
-    * at the same manifest position, WITHOUT applying tombstones (the
-    * correctness argument is in [[maybeMerge]]). Postings, stored
-    * fields and dictionaries union; stats are member sums. */
-  private def mergeRun(spark: SparkSession, root: java.io.File,
-                       start: Int, len: Int): (Int, Int) = {
-    val (nb, segs, gen) = readManifest(root)
-    val run = segs.slice(start, start + len)
-    require(run.forall(_.kind == "seg"), s"run at $start is not del-free")
-    if (run.size <= 1) return (0, 0)
-    val fp = graft.engine.Bucketing.fingerprint8(
-      "sx4merge|" + run.map(_.name).mkString("|"))
-    val name = s"seg=$fp"
-    val all = segmentsRead(spark, root, run)
-    graft.engine.Bucketing.atomicStage(new java.io.File(root, name)) {
-      tmp =>
-        val st = storedFrame(spark, root, run).drop("seg")
-        // postings first and alone (overwrite truncates tmp), then
-        // the independent artifact chains concurrently (guide §2.6)
-        all.select("term", "doc_id", "dl", "tf", "positions", "tb")
-          .repartition(nb, col("tb")) // one write task per bucket
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(tmp.getPath)
-        graft.engine.Parallel.all(
-          () => writeDict(spark, tmp, nb),
-          () => writeStored(st, tmp, nb),
-          // regenerate the completion-field artifact for the merged
-          // segment (tombstones are NOT applied here — the run is
-          // del-free and later dels still anti-join at serve time, the
-          // same contract as the merged postings)
-          () => cfTripleOf(root).foreach(t =>
-            writeCField(st, tmp, nb, readAnalyzer(root),
-              (t._1, t._2), t._3)))
-    }
-    writeManifest(root, nb,
-      segs.take(start) ++
-        Seq(Seg("seg", name, run.map(_.nDocs).sum,
-          run.map(_.totalLen).sum)) ++
-        segs.drop(start + len), gen)
-    // retirement stays vacuum's job (see [[mergePrefix]])
-    (run.size, 0)
   }
 
   /** Fold the first `prefixLen` manifest entries into one segment:

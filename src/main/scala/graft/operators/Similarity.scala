@@ -238,50 +238,6 @@ object Similarity {
       .select("id_a", "id_b", "cos")
   }
 
-  /** [[buildIvfIndex]] with int8-quantized vectors: the two scale
-    * levers combined — partition pruning cuts IO to the probed bucket,
-    * quantization cuts the bytes per vector ~4× (`qvec` is stored as
-    * `array<tinyint>` — a real storage-format saving, not a logical
-    * cast). `qscale`/`qnorm` ride along for exact dequantized scoring.
-    */
-  def buildIvfIndexInt8(emb: DataFrame, indexDir: String,
-                        nBits: Int = 4, dim: Int = DefaultDim): Unit =
-    quantizeInt8(withLshBuckets(emb, tables = 1, nBits = nBits, dim = dim)
-        .withColumnRenamed("bucket_0", "bucket"), vecCol = "embedding")
-      .withColumn("qvec8", expr("transform(qvec, x -> cast(x as tinyint))"))
-      .select("vec_id", "qvec8", "qscale", "qnorm", "bucket")
-      .write.mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(indexDir)
-
-  /** Query the int8 IVF index: quantize the query driver-side with its
-    * own scale, read ONLY the probed bucket partition, score by integer
-    * inner product (exact in any order) normalized by the stored norms.
-    */
-  def searchIvfInt8(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String, queryVec: Array[Double], k: Int,
-                    nBits: Int = 4, dim: Int = DefaultDim): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val bucket = (0 until nBits).map { j =>
-      val d = (0 until dim).map(kk => queryVec(kk) * planeComponent(0, j, kk)).sum
-      if (d >= 0.0) 1L else 0L
-    }.foldLeft(0L)((acc, b) => acc * 2 + b)
-    val qmax = queryVec.map(math.abs).max
-    require(qmax > 0.0, "query vector has no direction")
-    val qscale = 127.0 / qmax
-    val q8 = queryVec.map(x => math.floor(x * qscale + 0.5))
-    val qnorm = math.sqrt(q8.map(x => x * x).sum)
-    val qLit = typedLit(q8)
-    graft.engine.Pq.read(spark, indexDir)
-      .filter(col("bucket") === bucket) // partition-pruned scan
-      .withColumn("dq", expr("transform(qvec8, x -> cast(x as double))"))
-      .withColumn("qcos",
-        dot(qLit, col("dq"), dim) / (lit(qnorm) * col("qnorm")))
-      .orderBy(desc("qcos"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("neighbor_id"), col("qcos"))
-  }
-
   /** Symmetric per-vector int8 quantization: `scale = 127 / max|x_i|`,
     * `q_i = floor(x_i * scale + 0.5)` (half-up; floor is the portable
     * primitive — double→int CAST truncates in Spark but rounds in

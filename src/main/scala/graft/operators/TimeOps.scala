@@ -226,9 +226,8 @@ object TimeOps {
     * (ts, stage) order, when no partial exists yet) and at/before
     * the final anchor (at equality the until processes FIRST and
     * kills the partial); a killed key never re-anchors (EQL's
-    * multi-sequence restart is out of scope, stated — [[
-    * graft.streaming.EventStreams.sequenceStream]] replays the same
-    * rule). The until type must not be a stage type.
+    * multi-sequence restart is out of scope, stated). The until type
+    * must not be a stage type.
     *
     * EQL's per-stage `where` filters (round-18): `wheres(i)` is a
     * SQL predicate over the event row gating stage i's events

@@ -3667,17 +3667,16 @@ object LlmSurface {
         .orderBy("source")
     }),
 
-    // --- streaming-lakehouse loop, batch twin (q143's log × q147's
-    //     maintenance, composed through the SAME per-epoch body the
-    //     streaming sink runs — Pipeline.absorbSummaryBatch): two CDC
-    //     batches land as log segments AND advance a versioned
-    //     (count, sum) summary; the final summary must equal the
-    //     from-scratch aggregation of the fully-replayed log, emitted
-    //     as a literal-TRUE certificate beside the exact counts.
-    //     At 100 TB the summary advances in O(batch) per epoch —
-    //     the corpus re-aggregation the certificate compares against
-    //     never runs in production (EventStreams.maintainedSummarySink
-    //     is the foreachBatch wrapper; EventStreamsSpec replays it) ---
+    // --- maintained summary over a CDC log (q143's log × q147's
+    //     maintenance, one epoch at a time through
+    //     Pipeline.absorbSummaryBatch): two CDC batches land as log
+    //     segments AND advance a versioned (count, sum) summary; the
+    //     final summary must equal the from-scratch aggregation of the
+    //     fully-replayed log, emitted as a literal-TRUE certificate
+    //     beside the exact counts. At 100 TB the summary advances in
+    //     O(batch) per epoch — the corpus re-aggregation the
+    //     certificate compares against is the check, not the
+    //     maintenance path ---
     "q158_summary_log" -> ((s, d) => {
       import graft.operators.Pipeline
       val base = docs(s, d).select("doc_id", "source", "n_chars")
@@ -3788,15 +3787,12 @@ object LlmSurface {
         .orderBy("source", "rank")
     }),
 
-    // --- streaming-lakehouse loop, NON-ABELIAN twin (q162's top-k
-    //     maintenance × q143's log, composed through the SAME
-    //     per-epoch body the streaming sink runs —
+    // --- maintained NON-ABELIAN view over a CDC log (q162's top-k
+    //     maintenance × q143's log, one epoch at a time through
     //     Pipeline.absorbTopKBatch): two CDC batches land as log
     //     segments AND advance a versioned per-source top-3 view;
     //     the final view must equal the from-scratch top-3 of the
-    //     fully-replayed log, certificate literal-TRUE
-    //     (EventStreams.maintainedTopKSink is the foreachBatch
-    //     wrapper; EventStreamsSpec replays it) ---
+    //     fully-replayed log, certificate literal-TRUE ---
     "q173_topk_log" -> ((s, d) => {
       import graft.operators.Pipeline
       val base = docs(s, d).select("doc_id", "source", "n_chars")
@@ -3817,7 +3813,7 @@ object LlmSurface {
     }),
 
     // --- summary-version RETENTION (the Delta VACUUM of the
-    //     maintained-view tier — closes the streaming-lakehouse
+    //     maintained-view tier — closes the maintained-summary
     //     loop's last unbounded-growth path): three epochs advance
     //     the versioned summary, then pruneSummaries(keepLast=1)
     //     reclaims the two superseded versions; the surviving latest

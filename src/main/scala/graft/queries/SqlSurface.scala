@@ -765,7 +765,7 @@ object SqlSurface {
         .orderBy(asc_nulls_first("k_mod"))),
 
     // --- approximate distinct count (DataSketches HLL, the engine's one
-    //     cardinality sketch, shared with q119 and EventStreams). Sketch
+    //     cardinality sketch, shared with q119). Sketch
     //     ESTIMATES are engine-specific, so the oracled output is the
     //     exact counts plus a boolean ≤5%-relative-error check per
     //     estimate: DuckDB oracles the exact columns and literal TRUE,
@@ -958,10 +958,8 @@ object SqlSurface {
 
     // --- the sketch tier's QUANTILE member (round 9): fixed-width
     //     bucket histogram of event values + quantile read-off from
-    //     the cumulative walk — the batch twin of
-    //     EventStreams.windowedHistogram (same bucket function;
-    //     EventStreamsSpec pins replay + merge equality). Chosen over
-    //     randomized KLL deliberately: bucketing is a pure integer
+    //     the cumulative walk. Chosen over randomized KLL
+    //     deliberately: bucketing is a pure integer
     //     function of the value, so the sketch is deterministic and
     //     hash-oracled, and histograms are LINEAR — any rollup is a
     //     vector add of ≤ nBuckets counters. The p50/p95 flags are
@@ -1108,8 +1106,7 @@ object SqlSurface {
         .orderBy("event_id")
     }),
 
-    // --- batch sessionization: lag + cumulative gap counting (the
-    //     batch twin of streaming.EventStreams.sessionize) ---
+    // --- sessionization: lag + cumulative gap counting ---
     "q58_sessions" -> ((s, d) => {
       val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
       t(s, d, "events")
@@ -1408,15 +1405,21 @@ object SqlSurface {
           max("l_partkey").as("max_partkey"))
     }),
 
-    // --- interval join, batch twin: the SAME operator code as the
-    //     stream-stream interval join (EventStreams.intervalJoin — the
-    //     watermark is a no-op in batch), so the join logic itself gets
-    //     a DuckDB hash check, not just the streaming plumbing. ---
+    // --- interval join: each click paired with the same user's views
+    //     0..10 minutes after it (both bounds inclusive) ---
     "q63_interval_join" -> ((s, d) => {
       val e = t(s, d, "events")
       val clicks = e.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
       val views = e.filter(col("event_type") === "view")
-      graft.streaming.EventStreams.intervalJoin(clicks, views)
+        .select(col("event_id").as("view_id"),
+          col("user_id").as("v_user_id"), col("ts").as("view_ts"))
+      clicks.join(views,
+        col("user_id") === col("v_user_id") &&
+          col("view_ts") >= col("click_ts") &&
+          col("view_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
+        .select("click_id", "view_id", "user_id", "click_ts", "view_ts")
         .orderBy("click_id", "view_id")
     }),
 

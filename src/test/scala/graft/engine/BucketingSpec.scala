@@ -27,8 +27,10 @@ class BucketingSpec extends SparkSpec {
       .select("o_orderkey", "o_totalprice")
     Bucketing.writeBucketed(li, "li_b", 4, Seq("l_orderkey"))
     Bucketing.writeBucketed(o, "o_b", 4, Seq("o_orderkey"))
-    val joined = Bucketing.coLocatedJoin(spark, "li_b", "o_b",
-      "l_orderkey", "o_orderkey")
+    // co-located equi-join on the bucket keys: with matching bucket
+    // counts, neither side shuffles
+    val (lb, ob) = (spark.table("li_b"), spark.table("o_b"))
+    val joined = lb.join(ob, lb("l_orderkey") === ob("o_orderkey"))
     joined.collect()
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
@@ -139,38 +141,6 @@ class BucketingSpec extends SparkSpec {
     // ranking matches brute force restricted to the same bucket
     val cosToQ = rows.map(_._2)
     assert(cosToQ.sorted.reverse.toSeq == cosToQ.toSeq)
-  }
-
-  test("int8 IVF index: ~4x smaller vectors, pruned scan, matching top hit") {
-    def dirBytes(d: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum else f.length()
-      walk(new java.io.File(d))
-    }
-    val base = Files.createTempDirectory("graft-ivf8").toString
-    val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
-    Similarity.buildIvfIndex(emb, s"$base/f32")
-    Similarity.buildIvfIndexInt8(emb, s"$base/i8")
-    // the quantized index is materially smaller on disk (parquet packs
-    // tinyint vs double vector elements; metadata overhead dilutes the
-    // raw 8x element ratio at this tiny SF)
-    assert(dirBytes(s"$base/i8") < dirBytes(s"$base/f32") * 0.6,
-      s"i8=${dirBytes(s"$base/i8")} f32=${dirBytes(s"$base/f32")}")
-    val q = emb.filter(col("vec_id") === 0)
-      .select(expr("transform(embedding, x -> cast(x as double))"))
-      .as[Seq[Double]].head().toArray
-    val hits = Similarity.searchIvfInt8(spark, s"$base/i8", q, k = 5)
-    val rows = hits.as[(Long, Double)].collect()
-    val plan = hits.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(bucket"),
-      plan.take(1200))
-    // self-match survives quantization at the top with qcos ~ 1
-    assert(rows.head._1 == 0L && rows.head._2 > 0.995, rows.head.toString)
-    // quantized ranking tracks the float ranking on the same bucket
-    val f32 = Similarity.searchIvf(spark, s"$base/f32", q, k = 5)
-      .as[(Long, Double)].collect().map(_._1).toSet
-    assert((rows.map(_._1).toSet & f32).size >= 4,
-      s"i8=${rows.map(_._1).toSeq} f32=$f32")
   }
 
   test("zorderWrite narrows per-file envelopes on BOTH clustered columns") {

@@ -166,18 +166,6 @@ class DedupSpec extends SparkSpec {
     assert(verified.nonEmpty)
   }
 
-  test("staged (file-materialized) minhash equals the in-memory variant") {
-    val sf = spark.read.parquet(s"$sf001/documents.parquet")
-    val work = java.nio.file.Files.createTempDirectory("mh-staged").toString
-    val staged = Dedup.minhashNearDupsStaged(sf, work)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val mem = Dedup.minhashNearDups(sf, 0.8)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(staged == mem && staged.nonEmpty)
-    // intermediates really are on disk
-    assert(new java.io.File(s"$work/sigs").exists())
-  }
-
   test("shared pair stage equals fresh; content fingerprint invalidates") {
     val work = java.nio.file.Files.createTempDirectory("pair-stage").toString
     val sf = spark.read.parquet(s"$sf001/documents.parquet")
@@ -263,20 +251,6 @@ class DedupSpec extends SparkSpec {
       .filter(col("doc_a") % 5 === 4 || col("doc_b") % 5 === 4)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(inc == full, s"inc=$inc full=$full")
-  }
-
-  test("incrementalNearDupsStaged: staged corpus side equals self-contained") {
-    val sf = spark.read.parquet(s"$sf001/documents.parquet")
-    val corpus = sf.filter(col("doc_id") % 5 =!= 4)
-    val batch = sf.filter(col("doc_id") % 5 === 4)
-    // stage the corpus artifacts as an ingest job would
-    val work = java.nio.file.Files.createTempDirectory("inc-staged").toString
-    Dedup.minhashNearDupsStaged(corpus, work, threshold = 0.3).count()
-    val staged = Dedup.incrementalNearDupsStaged(batch, work, threshold = 0.3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val self = Dedup.incrementalNearDups(batch, corpus, threshold = 0.3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(staged == self, s"staged=$staged self=$self")
   }
 
   test("boilerplate: shared shingles flagged at minDocs, shingle-less doc scores 0") {

@@ -1,44 +1,38 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 import graft.SparkSpec
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A deterministic in-memory media table: payload bytes derive from
+    * the id. */
+  private def synthetic(n: Int): DataFrame = {
+    val rows = (0 until n).map { i =>
+      val mod = Seq("image", "audio", "video")(i % 3)
+      val len = 64 + (i * 37) % 512
+      val bytes = Array.tabulate[Byte](len)(j => ((i * 31 + j * 7) % 251).toByte)
+      Row(i.toLong, mod, s"application/x-fake-$mod",
+        if (mod == "image") Integer.valueOf(64 + i % 64) else null,
+        if (mod == "image") Integer.valueOf(64 + i % 48) else null,
+        if (mod != "image") java.lang.Long.valueOf(1000L + i) else null,
+        bytes)
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
+  }
+
   test("synthetic media table conforms to the media schema") {
-    val m = Multimodal.synthetic(spark, 30)
+    val m = synthetic(30)
     assert(m.schema == Multimodal.mediaSchema)
     assert(m.count() == 30)
     assert(m.select("modality").distinct().count() == 3)
   }
 
-  test("fakeDecode yields deterministic per-row features, batched per partition") {
-    val m = Multimodal.synthetic(spark, 30)
-    val f1 = Multimodal.fakeDecode(m).collect().sortBy(_.getLong(0))
-    val f2 = Multimodal.fakeDecode(m.repartition(7)).collect()
-      .sortBy(_.getLong(0))
-    assert(f1.length == 30)
-    // partitioning must not change results
-    assert(f1.map(_.toString).toSeq == f2.map(_.toString).toSeq)
-    val r0 = f1.head
-    assert(r0.getSeq[Double](r0.fieldIndex("feature")).length == 8)
-    assert(r0.getLong(r0.fieldIndex("n_bytes")) == 64L)
-  }
-
-  test("fakeDecode checksum matches an independent computation") {
-    val m = Multimodal.synthetic(spark, 3)
-    val payloads = m.select("media_id", "payload")
-      .as[(Long, Array[Byte])].collect().toMap
-    val decoded = Multimodal.fakeDecode(m)
-      .select("media_id", "checksum").as[(Long, Long)].collect().toMap
-    payloads.foreach { case (id, bytes) =>
-      val expect = bytes.foldLeft(0L)((h, b) => (h * 131 + (b & 0xff)) % 2147483647L)
-      assert(decoded(id) == expect)
-    }
-  }
-
   test("sampleFrames explodes every stride-th block") {
-    val m = Multimodal.synthetic(spark, 5)
+    val m = synthetic(5)
     val frames = Multimodal.sampleFrames(m, blockSize = 64, stride = 2)
     val byId = frames.select("media_id", "frame_no")
       .as[(Long, Int)].collect().groupBy(_._1)
@@ -49,7 +43,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("resizeStub keeps every factor-th byte, byte-exactly") {
-    val m = Multimodal.synthetic(spark, 5)
+    val m = synthetic(5)
     val orig = m.select("media_id", "payload")
       .as[(Long, Array[Byte])].collect().toMap
     val resized = Multimodal.resizeStub(m, factor = 3)
@@ -67,7 +61,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("withByteStats computes sizes and digests in pure SQL") {
-    val m = Multimodal.synthetic(spark, 4)
+    val m = synthetic(4)
     val s = Multimodal.withByteStats(m)
       .select("media_id", "n_bytes", "digest", "head_hex")
       .collect()

@@ -210,97 +210,6 @@ class SegmentedIndexSpec extends SparkSpec {
       k = 5, maxDist = 2).count() == 0L)
   }
 
-  test("maybeMerge folds only the oldest prefix at the tier bound; " +
-    "tombstones after the fold still apply to the merged segment") {
-    val root = Files.createTempDirectory("graft-tier").toString
-    SegmentedIndex.append(spark, root,
-      Seq((1L, "x x y"), (2L, "x z")).toDF("doc_id", "text"), "a",
-      nBuckets = 4)
-    SegmentedIndex.append(spark, root,
-      Seq((3L, "y y y z")).toDF("doc_id", "text"), "b")
-    SegmentedIndex.delete(spark, root, Seq(2L).toDF("doc_id"), "d1")
-    SegmentedIndex.append(spark, root,
-      Seq((4L, "w only")).toDF("doc_id", "text"), "c")
-    SegmentedIndex.append(spark, root,
-      Seq((5L, "x w")).toDF("doc_id", "text"), "d")
-    // within the bound: no-op
-    assert(SegmentedIndex.maybeMerge(spark, root, 4) == ((0, 0)))
-    // above it: fold the oldest three segments plus the tombstone
-    // between them, leaving the newest segment untouched
-    assert(SegmentedIndex.maybeMerge(spark, root, 2) == ((3, 1)))
-    // folded delete finally shifts the stats: doc 2 gone from N
-    assert(SegmentedIndex.stats(root) == ((2L, 0L, 4L)))
-    val xs = SegmentedIndex.search(spark, root, Seq("x"), 10)
-      .as[(Long, Double, Long)].collect().toSeq
-    // N=4, df(x)=2 (docs 1, 5): doc1 2*(4/2)=4, doc5 1*(4/2)=2
-    assert(xs == Seq((1L, 4.0, 1L), (5L, 2.0, 1L)), xs.toString)
-    // a delete issued AFTER the fold still hides a doc that now
-    // lives in the merged segment
-    SegmentedIndex.delete(spark, root, Seq(1L).toDF("doc_id"), "d2")
-    val xs2 = SegmentedIndex.search(spark, root, Seq("x"), 10)
-      .as[(Long, Double, Long)].collect().toSeq
-    assert(xs2 == Seq((5L, 2.0, 1L)), xs2.toString)
-  }
-
-  test("maybeMerge is size-aware: tiny streaming segments fold, the " +
-    "big bulk segment is NOT rewritten — the write-amplification " +
-    "scenario") {
-    val root = Files.createTempDirectory("graft-sizetier").toString
-    val big = (1L to 100L).map(i => (i, s"bulk doc number$i x"))
-      .toDF("doc_id", "text")
-    SegmentedIndex.append(spark, root, big, "bulk", nBuckets = 4)
-    SegmentedIndex.append(spark, root,
-      Seq((101L, "x tiny1")).toDF("doc_id", "text"), "t1")
-    SegmentedIndex.append(spark, root,
-      Seq((102L, "x tiny2")).toDF("doc_id", "text"), "t2")
-    SegmentedIndex.append(spark, root,
-      Seq((103L, "x tiny3")).toDF("doc_id", "text"), "t3")
-    val bigName = {
-      val fp = graft.engine.Bucketing.fingerprint8("sx4|bulk")
-      s"seg=$fp"
-    }
-    val bigMtime = new java.io.File(root, bigName).lastModified()
-    val before = SegmentedIndex.search(spark, root, Seq("x"), 200)
-      .as[(Long, Double, Long)].collect().toSet
-    // 4 live segments, bound 2 → fold 3: the del-free window with the
-    // smallest total length is (t1, t2, t3), never one including bulk
-    assert(SegmentedIndex.maybeMerge(spark, root, 2) == ((3, 0)))
-    assert(new java.io.File(root, bigName).isDirectory &&
-      new java.io.File(root, bigName).lastModified() == bigMtime,
-      "the big bulk segment must not be rewritten")
-    assert(SegmentedIndex.stats(root) == ((2L, 0L, 103L)))
-    assert(SegmentedIndex.search(spark, root, Seq("x"), 200)
-      .as[(Long, Double, Long)].collect().toSet == before,
-      "size-aware fold changed search results")
-    // a tombstone issued after the fold still applies to the merged
-    // tiny segment AND to the untouched big one
-    SegmentedIndex.delete(spark, root,
-      Seq(101L, 5L).toDF("doc_id"), "dz")
-    val ids = SegmentedIndex.search(spark, root, Seq("x"), 200)
-      .as[(Long, Double, Long)].collect().map(_._1).toSet
-    assert(!ids.contains(101L) && !ids.contains(5L))
-  }
-
-  test("a tombstone BETWEEN tiny segments blocks the window and the " +
-    "fold falls back to the absorbing prefix") {
-    val root = Files.createTempDirectory("graft-tierdel").toString
-    SegmentedIndex.append(spark, root,
-      Seq((1L, "x a")).toDF("doc_id", "text"), "s1", nBuckets = 4)
-    SegmentedIndex.delete(spark, root, Seq(1L).toDF("doc_id"), "d1")
-    SegmentedIndex.append(spark, root,
-      Seq((2L, "x b")).toDF("doc_id", "text"), "s2")
-    SegmentedIndex.delete(spark, root, Seq(2L).toDF("doc_id"), "d2")
-    SegmentedIndex.append(spark, root,
-      Seq((3L, "x c")).toDF("doc_id", "text"), "s3")
-    // fold 2 of 3: no del-free window of 2 exists → prefix fold
-    // absorbs (s1, d1, s2); d2 stays in the manifest AFTER the merged
-    // segment, so it still tombstones doc 2 (now inside the fold)
-    assert(SegmentedIndex.maybeMerge(spark, root, 2) == ((2, 1)))
-    assert(SegmentedIndex.stats(root) == ((2L, 1L, 2L)))
-    assert(SegmentedIndex.search(spark, root, Seq("x"), 10)
-      .as[(Long, Double, Long)].collect().map(_._1).toSeq == Seq(3L))
-  }
-
   test("manifest generations are create-exclusive and pruned: commits " +
     "advance g<n>, a planted colliding generation fails the writer " +
     "LOUDLY, and only the newest 8 generations survive") {
@@ -760,9 +669,8 @@ class SegmentedIndexSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq == Seq(("data", 1L)))
   }
 
-  test("family-wide aggregations: stats/histogram/facetStats/" +
-    "significant-terms over a rolled family equal the combined " +
-    "single index — the rollover seam invisible to analytics") {
+  test("family-wide stats aggregation over a rolled family equals the " +
+    "combined single index — the rollover seam invisible to analytics") {
     val dir = Files.createTempDirectory("graft-famagg").toString
     val stem = dir + "/logs"
     val alias = dir + "/write-alias"
@@ -788,22 +696,7 @@ class SegmentedIndexSpec extends SparkSpec {
     assert(SegmentedIndex.familyStatsFacet(spark, alias, q, "n")
       .collect().toSeq ==
       SegmentedIndex.statsFacet(spark, all, q, "n").collect().toSeq)
-    assert(SegmentedIndex.familyHistogramFacet(spark, alias, q, "n",
-      interval = 20L).collect().toSeq ==
-      SegmentedIndex.histogramFacet(spark, all, q, "n", 20L)
-        .collect().toSeq)
-    assert(SegmentedIndex.familyFacet(spark, alias, q, "cat", 10)
-      .collect().toSeq ==
-      SegmentedIndex.facet(spark, all, q, "cat", 10).collect().toSeq)
-    assert(SegmentedIndex.familyFacetStats(spark, alias, q, "cat", "n",
-      10).collect().toSeq ==
-      SegmentedIndex.facetStats(spark, all, q, "cat", "n", 10)
-        .collect().toSeq)
-    assert(SegmentedIndex.familySignificantTerms(spark, alias, q, 10,
-      minDocCount = 1L).collect().toSeq ==
-      SegmentedIndex.significantTerms(spark, all, q, 10, 1L)
-        .collect().toSeq)
-    // a tombstone in ONE family member flows through every family agg
+    // a tombstone in ONE family member flows through the family agg
     SegmentedIndex.delete(spark, stem + "-000002",
       Seq(5L).toDF("doc_id"), "dz")
     assert(SegmentedIndex.familyStatsFacet(spark, alias, q, "n")

@@ -25,10 +25,9 @@ import graft.SparkSpec
   * boolSearch, cardinalityFacet, collapseSearch,
   * completionFieldSuggest, compositeFacet, countQuery, deleteByQuery,
   * disMaxSearch, existsQuery, explainScore, facet, facetStats,
-  * familyFacet, familyFacetStats, familyHistogramFacet,
-  * familySignificantTerms, familyStatsFacet, fetch, fetchFields,
+  * familyStatsFacet, fetch, fetchFields,
   * filtersFacet, fuzzySearch, hasChildSearch, hasParentSearch,
-  * highlight, histogramFacet, maybeMerge, merge, missingFacet,
+  * highlight, histogramFacet, merge, missingFacet,
   * moreLikeThis, multiFacet, multiQuerySearch, multiSearch,
   * multiTermVectors, multiTermsFacet, namedQueriesSearch, nestedQuery,
   * percentileRanksFacet, phrasePrefixSearch, phraseSearch,
